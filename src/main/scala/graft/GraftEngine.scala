@@ -15,6 +15,12 @@ import org.apache.spark.sql.functions._
   * plan. Dim tables (scripts, templates) are derived from `outputs` on
   * demand; at warehouse scale they'd be materialized by the ingest the same
   * way the entity tables are.
+  *
+  * Read contract: each warehouse table's schema is learned once per engine
+  * instance, at the table's first read (through [[ChainIngest.read]]), and
+  * every later read reuses it without a schema-inference job; the file
+  * listing is fresh on every call, so a lookup always sees the latest
+  * committed batch, forks included.
   */
 /** `feeTree`/`protocolTrees` configure the chain economics (defaults fit
   * the synthetic fixture; pass `ChainConst.MainnetFeeTree` /
@@ -52,27 +58,29 @@ class GraftEngine(spark: SparkSession, warehouse: String,
     * dims read from their materialized tables only under
     * [[trustMaterializedDims]] (immutable warehouses); otherwise they
     * derive from `outputs` on demand so further ingest can never serve
-    * stale dims.
+    * stale dims. Each call lists the tables' files afresh; the schemas are
+    * the ones learned at this instance's first read of each table, so a
+    * call after the first runs no Spark job of its own.
     */
   def tables: ChainTables = {
-    val outputs = spark.read.parquet(s"$warehouse/outputs")
+    def read(table: String) = ingest.read(spark, table)
+    val outputs = read("outputs")
     val (ergoTrees, t8) =
       if (trustMaterializedDims &&
         java.nio.file.Files.exists(java.nio.file.Paths.get(s"$warehouse/ergo_trees")))
-        (spark.read.parquet(s"$warehouse/ergo_trees"),
-          spark.read.parquet(s"$warehouse/ergo_tree_t8s"))
+        (read("ergo_trees"), read("ergo_tree_t8s"))
       else BlockDerivation.scriptDims(outputs)
     ChainTables(
-      blocks = spark.read.parquet(s"$warehouse/blocks"),
-      txs = spark.read.parquet(s"$warehouse/txs"),
+      blocks = read("blocks"),
+      txs = read("txs"),
       outputs = outputs,
-      inputs = spark.read.parquet(s"$warehouse/inputs"),
-      assets = spark.read.parquet(s"$warehouse/assets"),
+      inputs = read("inputs"),
+      assets = read("assets"),
       ergoTrees = ergoTrees,
       ergoTreeT8s = t8,
-      dataInputs = spark.read.parquet(s"$warehouse/data_inputs"),
-      registers = spark.read.parquet(s"$warehouse/registers"),
-      tokens = spark.read.parquet(s"$warehouse/tokens"))
+      dataInputs = read("data_inputs"),
+      registers = read("registers"),
+      tokens = read("tokens"))
   }
 
   /** Register the warehouse as a session SQL surface — the Spark-native
@@ -84,9 +92,10 @@ class GraftEngine(spark: SparkSession, warehouse: String,
     * d.hash WHERE d.address = …`).
     *
     * Freshness model (two tiers, both zero-materialization):
-    *  - the nine entity tables, `spent_boxes`, and `utxo_live` register as
-    *    SQL-text views over `parquet.` paths — re-resolved (fresh file
-    *    listing) on EVERY query, so they always reflect the latest ingest;
+    *  - the eight stored entity tables, `spent_boxes`, and `utxo_live`
+    *    register as SQL-text views over `parquet.` paths — re-resolved
+    *    (fresh file listing, and a schema inferred again) on EVERY query,
+    *    so they always reflect the latest ingest;
     *  - `utxo` (the fast MVCC base+delta form), `utxo_by_script`,
     *    `tx_edges`, and UDF-derived script dims are computed plans pinned
     *    at registration — the reference's versioned-reader model exactly:

@@ -6,6 +6,7 @@ import graft.chain._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Paths}
 
@@ -80,6 +81,32 @@ class ChainIngest(
 
   private def p(name: String) = s"$warehouse/$name"
   private def exists(name: String) = Files.exists(Paths.get(p(name)))
+
+  /** Schemas learned by [[read]], keyed by table name. */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** Read a warehouse table. The table's first read in this instance infers
+    * its schema (one Spark job over a parquet footer); every later read
+    * passes the learned schema and runs no job until the query's own. The
+    * file listing and partition discovery still run on every call, so each
+    * read sees the latest committed files, including bucket dirs a fork
+    * deleted and rewrote. Sound because a warehouse's schema is fixed for
+    * its life ([[retainLosers]] must stay constant) and inference reads one
+    * footer, so it would return the learned schema again on every call.
+    * `path` defaults to the table's own dir; versioned tables (the UTXO
+    * base, one dir per `v=N`) key every version under one name.
+    */
+  private[graft] def read(spark: SparkSession, table: String): DataFrame =
+    read(spark, table, p(table))
+
+  private[graft] def read(spark: SparkSession, table: String, path: String): DataFrame =
+    schemas.get(table) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.putIfAbsent(table, df.schema)
+        df
+    }
 
   /** Run `f` with a pin hook for [[BlockDerivation.derive]]'s shared
     * sub-plans. The ingest paths fan one derivation out into 8 table writes
@@ -167,7 +194,7 @@ class ChainIngest(
   private[graft] def tipScan(spark: SparkSession,
     belowBucket: Int = Int.MaxValue): Option[DataFrame] =
     maxBucketOf("blocks", belowBucket).map(b =>
-      mainChainOnly(spark.read.parquet(p("blocks")).filter(col("heightBucket") === b))
+      mainChainOnly(read(spark, "blocks").filter(col("heightBucket") === b))
         .orderBy(desc("height")).limit(1))
 
   private def readTipFromStorage(spark: SparkSession,
@@ -434,7 +461,7 @@ class ChainIngest(
     Files.move(markerTmp, rebuildMarker,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val raw = spark.read.parquet(p("raw"))
+    val raw = read(spark, "raw")
     // losers are resolved from the tip WINDOW only (a driver walk over
     // ≤window*4 header rows; duplicate ids are collapsed by the walk's
     // id-keyed map), so resolution needs no dedupe at all.
@@ -534,9 +561,9 @@ class ChainIngest(
     // bounded-depth rollback cost (forks are ≤10 deep by consensus). In
     // retain mode the flagged orphan rows must not surface as UTXOs or
     // spend main-chain boxes.
-    val rebuilt = mainChainOnly(spark.read.parquet(p("outputs")))
+    val rebuilt = mainChainOnly(read(spark, "outputs"))
       .select(utxoCols.head, utxoCols.tail: _*)
-      .join(mainChainOnly(spark.read.parquet(p("inputs"))).select("boxId"),
+      .join(mainChainOnly(read(spark, "inputs")).select("boxId"),
         Seq("boxId"), "left_anti")
     prof("commitBase")(commitBase(rebuilt))
     Files.deleteIfExists(rebuildMarker)
@@ -673,7 +700,7 @@ class ChainIngest(
       throw new IllegalStateException("no utxo snapshot yet")
     val adds = liveDeltas.map(v =>
       spark.read.schema(addsSchema).parquet(s"${deltaPath(v)}/adds"))
-    val base = baseV.map(v => spark.read.parquet(basePath(v)))
+    val base = baseV.map(v => read(spark, "utxo/base", basePath(v)))
     val all = (base.toSeq ++ adds).reduce(_ unionByName _)
     if (liveDeltas.isEmpty) all
     else {
@@ -759,26 +786,28 @@ class ChainIngest(
     }
     // a table dir can exist but be unreadable or empty mid-crash (only a
     // _temporary/ left, or max() == null) — exactly those states read as
-    // tip -1. Genuine I/O errors PROPAGATE: treating a transient read
-    // failure as "empty" would trigger a full destructive rebuild.
+    // tip -1: schema inference fails on a first read, and a read with a
+    // learned schema lists no files. Genuine I/O errors PROPAGATE: treating
+    // a transient read failure as "empty" would trigger a full destructive
+    // rebuild.
     def tipOf(mk: => DataFrame, c: String): Int =
       try {
         val r = mk.agg(max(col(c))).head()
         if (r.isNullAt(0)) -1 else r.getInt(0)
       } catch { case _: org.apache.spark.sql.AnalysisException => -1 }
-    val rawTip = tipOf(spark.read.parquet(p("raw")), "header.height")
+    val rawTip = tipOf(read(spark, "raw"), "header.height")
     if (rawTip < 0) return false // raw itself empty/absent: nothing to replay from
     val tips = Seq(
-      if (exists("blocks")) tipOf(spark.read.parquet(p("blocks")), "height") else -1,
-      if (exists("txs")) tipOf(spark.read.parquet(p("txs")), "height") else -1,
-      if (exists("outputs")) tipOf(spark.read.parquet(p("outputs")), "settlementHeight") else -1,
+      if (exists("blocks")) tipOf(read(spark, "blocks"), "height") else -1,
+      if (exists("txs")) tipOf(read(spark, "txs"), "height") else -1,
+      if (exists("outputs")) tipOf(read(spark, "outputs"), "settlementHeight") else -1,
       if (currentUtxoVersion().isDefined) tipOf(utxo(spark), "settlementHeight") else -1)
     if (tips.exists(_ != rawTip)) {
       reprocessFromRaw(spark, math.max(tips.min + 1, 0)); true
     } else false
   }
 
-  def blocks(spark: SparkSession): DataFrame = spark.read.parquet(p("blocks"))
+  def blocks(spark: SparkSession): DataFrame = read(spark, "blocks")
 
   def mainChainBlocks(spark: SparkSession): DataFrame =
     mainChainOnly(blocks(spark))
@@ -802,7 +831,7 @@ class ChainIngest(
   def rangeScan(spark: SparkSession, table: String, heightCol: String,
     fromHeight: Int, toHeight: Int): DataFrame = {
     require(fromHeight <= toHeight, "empty height range")
-    spark.read.parquet(p(table))
+    read(spark, table)
       .filter(col("heightBucket")
         .between(fromHeight / bucketSize, toHeight / bucketSize))
       .filter(col(heightCol).between(fromHeight, toHeight))

@@ -1,10 +1,15 @@
 package graft
 
 import graft.chain._
+import graft.streaming.ChainIngest
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** End-to-end facade test: the reference-user workflow (backfill → query
   * surface) through GraftEngine, plus the crash-heal integrity path.
@@ -12,15 +17,64 @@ import java.nio.file.Files
 class EngineSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("backfill then serve the full query surface through the facade") {
+  private val n = 50
+
+  /** A warehouse backfilled with the `n`-block fixture, shared read-only. */
+  private lazy val backfilled: String = {
     import spark.implicits._
-    val n = 50
     val base = Files.createTempDirectory("graft-engine").toString
     BlockSource.writeJsonLines(
       spark.createDataset(ChainFixture.generate(n)), s"$base/blocks")
+    new GraftEngine(spark, s"$base/warehouse").backfill(s"$base/blocks")
+    s"$base/warehouse"
+  }
 
-    val engine = new GraftEngine(spark, s"$base/warehouse")
-    engine.backfill(s"$base/blocks")
+  /** Spark jobs that `f` submits from this thread. They run under a job
+    * group of their own; a marker job submitted after `f` bounds the wait
+    * for the listener bus, which delivers job starts in submission order.
+    */
+  private def jobsIn(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == marker) markerSeen.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      f
+      sc.setJobGroup(marker, "listener-bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener bus did not drain in 30 s")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** An engine's answers for these ids: each block by id, the boxes by id
+    * in two modes, and the last five blocks.
+    */
+  private def answers(e: GraftEngine, blockIds: Seq[String],
+    boxIds: Seq[String]): Seq[Seq[Row]] = {
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    blockIds.map(id => rows(e.blockById(id))) ++ Seq(
+      rows(e.boxesByIds(UtxoQueries.Any, boxIds)),
+      rows(e.boxesByIds(UtxoQueries.Unspent, boxIds)),
+      e.lastBlocks(5).collect().toSeq)
+  }
+
+  test("backfill then serve the full query surface through the facade") {
+    import spark.implicits._
+    val engine = new GraftEngine(spark, backfilled)
 
     val direct = BlockDerivation.derive(spark.createDataset(ChainFixture.generate(n)))
     assert(engine.utxos.count() == UtxoQueries.utxos(direct).count())
@@ -94,6 +148,73 @@ class EngineSpec extends AnyFunSuite {
     // PageRank is a probability distribution over every script
     val prSum = engine.scriptPageRank().agg(sum("pagerank")).head.getDouble(0)
     assert(math.abs(prSum - 1.0) < 1e-3, s"pagerank mass $prSum must be ~1")
+  }
+
+  test("a lookup after the first tables call runs one Spark job: schemas are learned once") {
+    val engine = new GraftEngine(spark, backfilled)
+    engine.tables
+    val tipId = new GraftEngine(spark, backfilled).lastBlocks(1)
+      .select("blockId").head.getString(0)
+    val jobs = jobsIn {
+      engine.tables
+      assert(engine.blockById(tipId).collect().length == 1)
+    }
+    assert(jobs == 1, s"tables + blockById submitted $jobs jobs; schema inference must not re-run")
+  }
+
+  test("a long-lived engine answers like a new one across an append and a fork; heal unchanged") {
+    import spark.implicits._
+    val (all, winnerIds) = ChainFixture.generateWithFork(forkAt = 20, shortLen = 2, longLen = 4)
+    val trunk = all.filter(_.header.height <= 20)
+    val loser = all.filter(b => b.header.height > 20 && !winnerIds.contains(b.header.id))
+    val winner = all.filter(b => winnerIds.contains(b.header.id))
+    val wh = Files.createTempDirectory("graft-engine-ryw").toString + "/warehouse"
+    val writer = new ChainIngest(wh)
+    writer.processBatch(spark.createDataset(trunk), 0L)
+
+    val engine = new GraftEngine(spark, wh)
+    val blockIds = Seq(trunk.last, loser.last, winner.last).map(_.header.id)
+    val boxIds = all.filter(_.header.height >= 19)
+      .flatMap(_.transactions.transactions.flatMap(_.outputs.map(_.boxId)))
+    def agrees(): Seq[Seq[Row]] = {
+      val got = answers(engine, blockIds, boxIds)
+      assert(got == answers(new GraftEngine(spark, wh), blockIds, boxIds),
+        "the long-lived engine must answer exactly as a new engine does")
+      got
+    }
+    assert(agrees().head.size == 1)
+
+    writer.processBatch(spark.createDataset(loser), 1L) // append
+    val afterAppend = agrees()
+    assert(afterAppend(1).size == 1, "the appended losing tip must be visible")
+    assert(afterAppend(3).nonEmpty)
+
+    // fork: the default 10000-height bucket puts the whole chain in one
+    // bucket, so dropBucketsFrom deletes and rewrites every table's dir
+    writer.processBatch(spark.createDataset(winner), 2L)
+    val afterFork = agrees()
+    assert(afterFork(1).isEmpty, "the losing tip must be gone after the fork")
+    assert(afterFork(2).size == 1, "the winning tip must be visible after the fork")
+    assert(afterFork.last.map(_.getAs[Int]("height")) == (24 to 20 by -1))
+
+    // heal through the long-lived engine, whose schemas are learned: a table
+    // root with no part files still reads as tip -1 and is rebuilt ...
+    ChainIngest.rmTree(s"$wh/txs")
+    Files.createDirectories(Paths.get(s"$wh/txs"))
+    assert(engine.tables.txs.count() == 0)
+    assert(engine.heal(), "an empty txs root must read as tip -1 and trigger healing")
+    assert(agrees() == afterFork)
+    assert(engine.tables.txs.count() ==
+      BlockDerivation.derive(spark.createDataset(trunk ++ winner)).txs.count())
+
+    // ... and a genuine read failure propagates instead of reading as empty
+    val part = {
+      val w = Files.walk(Paths.get(s"$wh/outputs"))
+      try w.toArray.map(_.toString).filter(_.endsWith(".parquet")).head
+      finally w.close()
+    }
+    Files.write(Paths.get(part), "not a parquet file".getBytes)
+    intercept[org.apache.spark.SparkException](engine.heal())
   }
 
   test("persistent catalog: a SECOND session queries warehouse and corpus by name") {
