@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Lineage.LineageCut
 
 import graft.chain._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -93,8 +93,12 @@ class ChainIngest(
     * deleted and rewrote. Sound because a warehouse's schema is fixed for
     * its life ([[retainLosers]] must stay constant) and inference reads one
     * footer, so it would return the learned schema again on every call.
-    * `path` defaults to the table's own dir; versioned tables (the UTXO
-    * base, one dir per `v=N`) key every version under one name.
+    * A root that holds no part file yet (a sparse table before its first
+    * row, a root emptied by a crash) has nothing to infer from: it reads as
+    * zero rows under the table's [[knownSchema]], and is inferred again at
+    * the next read. `path` defaults to the table's own dir; versioned
+    * tables (the UTXO base, one dir per `v=N`) key every version under one
+    * name.
     */
   private[graft] def read(spark: SparkSession, table: String): DataFrame =
     read(spark, table, p(table))
@@ -103,29 +107,70 @@ class ChainIngest(
     schemas.get(table) match {
       case Some(s) => spark.read.schema(s).parquet(path)
       case None =>
-        val df = spark.read.parquet(path)
-        schemas.putIfAbsent(table, df.schema)
-        df
+        try {
+          val df = spark.read.parquet(path)
+          schemas.putIfAbsent(table, df.schema)
+          df
+        } catch {
+          case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+            spark.read.schema(knownSchema(spark, table).getOrElse(throw e)).parquet(path)
+        }
     }
+
+  /** The eight entity tables of a derivation, each with its height column. */
+  private def entities(t: ChainTables): Seq[(String, DataFrame, String)] = Seq(
+    ("blocks", t.blocks, "height"), ("txs", t.txs, "height"),
+    ("outputs", t.outputs, "settlementHeight"), ("inputs", t.inputs, "height"),
+    ("assets", t.assets, "height"), ("data_inputs", t.dataInputs, "height"),
+    ("registers", t.registers, "height"), ("tokens", t.tokens, "issuingHeight"))
+
+  /** Append a derived entity table's rows to its bucket-partitioned root. */
+  private def appendEntity(name: String, df: DataFrame, heightCol: String, main: Boolean): Unit =
+    withBucket(flagged(df, main), heightCol).write.mode(SaveMode.Append)
+      .partitionBy("heightBucket").parquet(p(name))
+
+  @volatile private var entitySchemas = Map.empty[String, StructType]
+
+  /** A stored table's schema, known without reading a file: an entity table
+    * as written (a derivation over no blocks — analysis only, no job — plus
+    * the retain-mode flag and the bucket column), raw from its encoder, the
+    * UTXO base from [[utxoSchema]].
+    */
+  private[graft] def knownSchema(spark: SparkSession, table: String): Option[StructType] = {
+    if (entitySchemas.isEmpty)
+      entitySchemas = entities(BlockDerivation.derive(
+        spark.emptyDataset(Encoders.product[RawBlock]), feeTree, protocolTrees))
+        .map { case (name, df, h) => name -> withBucket(flagged(df, main = true), h).schema }
+        .toMap
+    table match {
+      case "raw" => Some(Encoders.product[RawBlock].schema)
+      case "utxo/base" => Some(utxoSchema)
+      case _ => entitySchemas.get(table)
+    }
+  }
 
   /** Run `f` with a pin hook for [[BlockDerivation.derive]]'s shared
     * sub-plans. The ingest paths fan one derivation out into 8 table writes
     * plus tip/delta actions; unpinned, every action BOTH re-runs the
-    * UDF-heavy decode of the micro-batch AND re-pays Catalyst
-    * analysis/codegen of the ~200-operator derivation plan (the dominant
-    * cost at micro-batch sizes — measured 3–10× wall on the fork path).
-    * `localCheckpoint` fixes both: partitions are computed once and the
-    * lineage is CUT, so each downstream action analyzes a 3-node LogicalRDD
-    * plan. Micro-batches are trigger-bounded, so the checkpointed
-    * partitions are small; Spark's ContextCleaner reclaims them once the
-    * batch's frames are unreachable. Trade-off (documented Spark behavior):
-    * a lost executor loses local checkpoints — recovery here is the
-    * STREAM's, not the plan's: foreachBatch redelivers the batch and both
-    * ingest paths are idempotent (raw is id-deduped; appends land on the
-    * fork path on replay).
+    * UDF-heavy decode of the micro-batch AND re-pays Catalyst analysis and
+    * planning of the ~200-operator derivation plan (measured 3–10× wall on
+    * the fork path). `localCheckpoint` fixes both: partitions are computed
+    * once and the lineage is CUT, so each downstream action analyzes a
+    * 3-node LogicalRDD plan. The cut is eager, one job per pinned core
+    * before any table write: a lazy cut materialized by whichever of the
+    * concurrent writes finished first dropped the core's lineage while the
+    * other writes' tasks over it still ran, so their SQL metrics were
+    * already collected when those tasks reported ("non-existent
+    * accumulator"). Micro-batches are trigger-bounded, so the
+    * checkpointed partitions are small; Spark's ContextCleaner reclaims
+    * them once the batch's frames are unreachable. Trade-off (documented
+    * Spark behavior): a lost executor loses local checkpoints — recovery
+    * here is the STREAM's, not the plan's: foreachBatch redelivers the
+    * batch and both ingest paths are idempotent (raw is id-deduped; appends
+    * land on the fork path on replay).
     */
   private def withPinned[A](f: (DataFrame => DataFrame) => A): A =
-    f(df => df.cutLineage(eager = false))
+    f(df => df.cutLineage())
 
   /** Fan independent entity-table writes out concurrently. The 8 sinks
     * share nothing below the pinned derivation cores (materialized before
@@ -147,14 +192,35 @@ class ChainIngest(
     outcomes.collectFirst { case Failure(e) => throw e }
   }
 
-  // Stage timing for ingest-path tuning, gated on GRAFT_PROF (off = no-op).
-  private def prof[A](label: String)(f: => A): A = {
-    if (sys.env.contains("GRAFT_PROF")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[prof]   $label%-24s ${(System.nanoTime()-t0)/1e9}%7.2f s"); r
-    } else f
+  /** Run `f` with whole-stage codegen off and Spark's expression factories
+    * interpreted, restoring the session's prior values afterwards. Every
+    * plan whose input is the micro-batch or a fork's rebuilt tail runs in
+    * this scope: such a batch needs 200–280 generated classes, more than
+    * Spark's codegen cache holds (`spark.sql.codegen.cache.maxEntries`, 100
+    * by default and a static conf), so compiled, it paid a Janino compile
+    * per class on every batch while its few rows ran in microseconds
+    * either way. Plans over stored history (the UTXO base rebuild and
+    * compaction, the hot-key merge, fork resolution over raw, the tip
+    * scans) stay compiled: interpreted, they are slower on millions of
+    * rows, and with only those left the cache holds ingest's classes from
+    * one batch to the next. Under [[start]] the session is the stream's own
+    * clone, so readers' sessions never see these values; a direct
+    * [[processBatch]] or [[heal]] caller's session runs interpreted for
+    * the call's duration.
+    */
+  private def interpreted[A](spark: SparkSession)(f: => A): A = {
+    val confs = Seq(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val set = spark.conf.getAll
+    val prior = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
-
 
   // ST2 tip carry — the reference's in-memory ChainTip FIFO
   // (ChainLinker.scala:46-54): the stored tip row is held across
@@ -226,8 +292,18 @@ class ChainIngest(
     */
   def processBatch(batch: Dataset[RawBlock], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (prof("isEmpty")(batch.isEmpty)) return
-    prof("rawAppend")(batch.toDF().write.mode(SaveMode.Append).parquet(p("raw")))
+    // one aggregate pass over the batch: its size, lowest height,
+    // duplicate-height detection, and the lowest block's timestamp (min
+    // over (height, ts) structs — deterministic under same-height forks,
+    // unlike a sort+take).
+    val stats = interpreted(spark)(batch.toDF().select(
+      count(lit(1)).as("n"),
+      min(col("header.height")).as("minH"),
+      countDistinct(col("header.height")).as("nh"),
+      min(struct(col("header.height"), col("header.timestamp")))
+        .getField("timestamp").as("firstTs")).head())
+    if (stats.getAs[Long]("n") == 0) return
+    interpreted(spark)(batch.toDF().write.mode(SaveMode.Append).parquet(p("raw")))
 
     // steady state touches NO stored table for the tip — it was carried from
     // the previous batch; only a fresh instance (start / restart / post-heal)
@@ -237,15 +313,6 @@ class ChainIngest(
       cachedTip
     }
 
-    // one aggregate pass over the batch: lowest height, duplicate-height
-    // detection, and the lowest block's timestamp (min over (height, ts)
-    // structs — deterministic under same-height forks, unlike a sort+take).
-    val stats = prof("batchStats")(batch.toDF().select(
-      min(col("header.height")).as("minH"),
-      count(lit(1)).as("n"),
-      countDistinct(col("header.height")).as("nh"),
-      min(struct(col("header.height"), col("header.timestamp")))
-        .getField("timestamp").as("firstTs")).head())
     val minBatchHeight = stats.getAs[Int]("minH")
     val hasInBatchFork = stats.getAs[Long]("n") != stats.getAs[Long]("nh")
     // ST3: fork vs the stored tip, OR competing same-height blocks inside
@@ -253,7 +320,7 @@ class ChainIngest(
     val isFork = hasInBatchFork || tip.exists(t => minBatchHeight <= t.getAs[Int]("height"))
 
     try {
-      if (isFork) prof("reprocessFromRaw")(reprocessFromRaw(spark, minBatchHeight))
+      if (isFork) reprocessFromRaw(spark, minBatchHeight)
       else appendIncremental(batch, tip, minBatchHeight,
         if (stats.isNullAt(3)) None else Some(stats.getAs[Long]("firstTs")))
     } catch {
@@ -305,44 +372,37 @@ class ChainIngest(
     */
   private def appendIncremental(
     batch: Dataset[RawBlock], tip: Option[Row],
-    minBatchHeight: Int, firstTs: Option[Long]): Unit = withPinned { pin =>
-    val t = BlockDerivation.derive(batch, feeTree, protocolTrees, pin)
-    val (blocksShifted, txsShifted, outputsShifted) =
-      shiftFromTip(t, tip, minBatchHeight, firstTs)
+    minBatchHeight: Int, firstTs: Option[Long]): Unit = {
+    val spark = batch.sparkSession
+    val (batchOutputs, batchInputIds) = interpreted(spark)(withPinned { pin =>
+      val t = BlockDerivation.derive(batch, feeTree, protocolTrees, pin)
+      val (blocksShifted, txsShifted, outputsShifted) =
+        shiftFromTip(t, tip, minBatchHeight, firstTs)
 
-    // next batch's tip, computed from the micro-batch's own rows (a
-    // batch-sized TakeOrdered) — assigned only after every write commits.
-    // This collect also eagerly materializes the pinned derivation cores
-    // (blocks sits atop both flatten cores), so the concurrent writes below
-    // read the cache instead of racing to compute it.
-    val newTip = blocksShifted.orderBy(desc("height")).limit(1)
-      .collect().headOption
+      // next batch's tip, computed from the micro-batch's own rows (a
+      // batch-sized TakeOrdered) — assigned only after every write commits.
+      val newTip = blocksShifted.orderBy(desc("height")).limit(1)
+        .collect().headOption
 
-    def append(df: DataFrame, heightCol: String, name: String): () => Unit =
-      () => withBucket(flagged(df, main = true), heightCol).write
-        .mode(SaveMode.Append).partitionBy("heightBucket").parquet(p(name))
-    parallelCommit(Seq(
-      append(blocksShifted, "height", "blocks"),
-      append(txsShifted, "height", "txs"),
-      append(outputsShifted, "settlementHeight", "outputs"),
-      append(t.inputs, "height", "inputs"),
-      append(t.assets, "height", "assets"),
-      append(t.dataInputs, "height", "data_inputs"),
-      append(t.registers, "height", "registers"),
-      append(t.tokens, "issuingHeight", "tokens")))
+      parallelCommit(entities(t.copy(
+        blocks = blocksShifted, txs = txsShifted, outputs = outputsShifted)).map {
+        case (name, df, heightCol) => () => appendEntity(name, df, heightCol, main = true)
+      })
 
-    // K2 delta commit: adds = batch outputs not spent in-batch; removes =
-    // batch inputs that spend pre-batch boxes. View-level soundness needs
-    // box ids to never recur — guaranteed by the protocol (a box id hashes
-    // its creating tx).
-    val batchOutputs = t.outputs.select(utxoCols.head, utxoCols.tail: _*)
-    val batchInputIds = t.inputs.select("boxId")
-    commitDelta(
-      adds = batchOutputs.join(batchInputIds, Seq("boxId"), "left_anti"),
-      removes = batchInputIds.join(batchOutputs.select("boxId"), Seq("boxId"), "left_anti"))
-
-    cachedTip = newTip.orElse(tip)
-    tipSeeded = true
+      // K2 delta commit: adds = batch outputs not spent in-batch; removes =
+      // batch inputs that spend pre-batch boxes. View-level soundness needs
+      // box ids to never recur — guaranteed by the protocol (a box id hashes
+      // its creating tx).
+      val batchOutputs = t.outputs.select(utxoCols.head, utxoCols.tail: _*)
+      val batchInputIds = t.inputs.select("boxId")
+      commitDelta(
+        adds = batchOutputs.join(batchInputIds, Seq("boxId"), "left_anti"),
+        removes = batchInputIds.join(batchOutputs.select("boxId"), Seq("boxId"), "left_anti"))
+      cachedTip = newTip.orElse(tip)
+      tipSeeded = true
+      (batchOutputs, batchInputIds)
+    })
+    compactUtxoIfDue(spark)
 
     // K6 online learning: fold this batch's per-script box activity into
     // the persisted counters (after the batch commits — a failed batch
@@ -391,7 +451,7 @@ class ChainIngest(
         .select("ergoTreeHash"))
       .groupBy("ergoTreeHash").agg(count(lit(1)).as("ops"))
     val v = (hotBaseVs() ++ hotDeltaVs()).maxOption.getOrElse(-1L) + 1
-    writeHot(batchOps, "delta", v)
+    interpreted(spark)(writeHot(batchOps, "delta", v))
     val baseV = hotBaseVs().lastOption.getOrElse(-1L)
     val staleDeltas = hotDeltaVs().filter(_ <= baseV) // crashed pre-GC leftovers
     val liveDeltas = hotDeltaVs().filter(_ > baseV)
@@ -465,7 +525,7 @@ class ChainIngest(
     // losers are resolved from the tip WINDOW only (a driver walk over
     // ≤window*4 header rows; duplicate ids are collapsed by the walk's
     // id-keyed map), so resolution needs no dedupe at all.
-    val losers = prof("losingBlockIds")(ForkResolver.losingBlockIds(raw))
+    val losers = ForkResolver.losingBlockIds(raw)
     // a replayed batch (foreachBatch redelivery after a crash) appends its
     // raw blocks twice — dedupe by block id so replay is idempotent
     // end-to-end. Only the REBUILT range can hold duplicates that matter
@@ -480,81 +540,58 @@ class ChainIngest(
       .filter(if (losers.isEmpty) lit(true)
         else !col("header.id").isin(losers.toSeq: _*))
       .as[RawBlock]
-    withPinned { pin =>
-    val t = BlockDerivation.derive(tail, feeTree, protocolTrees, pin)
-
     // seed from the last block BELOW the rebuilt range (untouched buckets
     // are correct by induction) — read pruned to the max surviving bucket;
     // the tail's own lowest block supplies the mining-time boundary
     // timestamp.
-    val tip: Option[Row] = prof("readTip")(
+    val tip: Option[Row] =
       if (forkBucket > 0) readTipFromStorage(spark, belowBucket = forkBucket)
-      else None)
-    // prof wraps the ACTION (r18: it previously timed only the lazy toDF,
-    // hiding the tail aggregate's real cost from the stage profile)
-    val tailStats = prof("tailStats")(tail.toDF().select(
-      min(col("header.height")).as("minH"),
-      min(struct(col("header.height"), col("header.timestamp")))
-        .getField("timestamp").as("firstTs")).head())
-    val (blocksShifted, txsShifted, outputsShifted) =
-      if (tailStats.isNullAt(0)) (t.blocks, t.txs, t.outputs)
-      else shiftFromTip(t, tip, tailStats.getAs[Int]("minH"),
-        Some(tailStats.getAs[Long]("firstTs")))
+      else None
 
-    // Explicit bucket deletion, NOT dynamic partition overwrite: a sparse
-    // table (tokens, data_inputs, registers…) can have ZERO winner rows in a
-    // rebuilt bucket, and dynamic overwrite would then leave the losing
-    // branch's stale partition in place — phantom tokens, and stale inputs
-    // that corrupt the UTXO anti-join. Delete-then-append is not atomic; a
-    // crash in between leaves the table tip behind raw, which heal()
-    // detects and repairs.
-    // the winning tip row doubles as the eager materialization of the
-    // pinned derivation cores, so the concurrent overwrites below hit the
-    // cache; cachedTip is only ASSIGNED after every write commits.
-    val newTip = prof("tipCollect")(
-      blocksShifted.orderBy(desc("height")).limit(1).collect().headOption)
+    val newTip = interpreted(spark)(withPinned { pin =>
+      val t = BlockDerivation.derive(tail, feeTree, protocolTrees, pin)
+      val tailStats = tail.toDF().select(
+        min(col("header.height")).as("minH"),
+        min(struct(col("header.height"), col("header.timestamp")))
+          .getField("timestamp").as("firstTs")).head()
+      val (blocksShifted, txsShifted, outputsShifted) =
+        if (tailStats.isNullAt(0)) (t.blocks, t.txs, t.outputs)
+        else shiftFromTip(t, tip, tailStats.getAs[Int]("minH"),
+          Some(tailStats.getAs[Long]("firstTs")))
 
-    def overwriteTail(df: DataFrame, heightCol: String, name: String): () => Unit =
-      () => prof(s"overwrite $name") {
-        dropBucketsFrom(name, forkBucket)
-        withBucket(flagged(df, main = true), heightCol).write.mode(SaveMode.Append)
-          .partitionBy("heightBucket").parquet(p(name))
+      // Explicit bucket deletion, NOT dynamic partition overwrite: a sparse
+      // table (tokens, data_inputs, registers…) can have ZERO winner rows in
+      // a rebuilt bucket, and dynamic overwrite would then leave the losing
+      // branch's stale partition in place — phantom tokens, and stale inputs
+      // that corrupt the UTXO anti-join. Delete-then-append is not atomic; a
+      // crash in between leaves the table tip behind raw, which heal()
+      // detects and repairs.
+      // cachedTip is only ASSIGNED after every write commits.
+      val newTip = blocksShifted.orderBy(desc("height")).limit(1).collect().headOption
+      parallelCommit(entities(t.copy(
+        blocks = blocksShifted, txs = txsShifted, outputs = outputsShifted)).map {
+        case (name, df, heightCol) => () =>
+          dropBucketsFrom(name, forkBucket)
+          appendEntity(name, df, heightCol, main = true)
+      })
+
+      // Soft-delete retention: the losing branch's rows are re-derived and
+      // appended flagged mainChain=false — the dropBucketsFrom above wiped
+      // any previously-flagged orphans in the rebuilt range, and every
+      // still-relevant orphan is in the tip-window loser set (consensus
+      // bounds fork depth, so orphans older than the window sit in untouched
+      // buckets). Derivation of the losers is unseeded: cumulative/gix
+      // columns on orphans are branch-local (documented on [[retainLosers]]).
+      if (retainLosers && losers.nonEmpty) {
+        val lt = BlockDerivation.derive(
+          rangeDeduped.filter(col("header.id").isin(losers.toSeq: _*)).as[RawBlock],
+          feeTree, protocolTrees, pin)
+        parallelCommit(entities(lt).map {
+          case (name, df, heightCol) => () => appendEntity(name, df, heightCol, main = false)
+        })
       }
-    parallelCommit(Seq(
-      overwriteTail(blocksShifted, "height", "blocks"),
-      overwriteTail(txsShifted, "height", "txs"),
-      overwriteTail(outputsShifted, "settlementHeight", "outputs"),
-      overwriteTail(t.inputs, "height", "inputs"),
-      overwriteTail(t.assets, "height", "assets"),
-      overwriteTail(t.dataInputs, "height", "data_inputs"),
-      overwriteTail(t.registers, "height", "registers"),
-      overwriteTail(t.tokens, "issuingHeight", "tokens")))
-
-    // Soft-delete retention: the losing branch's rows are re-derived and
-    // appended flagged mainChain=false — the dropBucketsFrom above wiped
-    // any previously-flagged orphans in the rebuilt range, and every
-    // still-relevant orphan is in the tip-window loser set (consensus
-    // bounds fork depth, so orphans older than the window sit in untouched
-    // buckets). Derivation of the losers is unseeded: cumulative/gix
-    // columns on orphans are branch-local (documented on [[retainLosers]]).
-    if (retainLosers && losers.nonEmpty) {
-      val lt = BlockDerivation.derive(
-        rangeDeduped.filter(col("header.id").isin(losers.toSeq: _*)).as[RawBlock],
-        feeTree, protocolTrees, pin)
-      lt.blocks.count() // eager-materialize the loser cores pre-fan-out
-      def appendLosers(df: DataFrame, heightCol: String, name: String): () => Unit =
-        () => withBucket(flagged(df, main = false), heightCol)
-          .write.mode(SaveMode.Append).partitionBy("heightBucket").parquet(p(name))
-      parallelCommit(Seq(
-        appendLosers(lt.blocks, "height", "blocks"),
-        appendLosers(lt.txs, "height", "txs"),
-        appendLosers(lt.outputs, "settlementHeight", "outputs"),
-        appendLosers(lt.inputs, "height", "inputs"),
-        appendLosers(lt.assets, "height", "assets"),
-        appendLosers(lt.dataInputs, "height", "data_inputs"),
-        appendLosers(lt.registers, "height", "registers"),
-        appendLosers(lt.tokens, "issuingHeight", "tokens")))
-    }
+      newTip
+    })
 
     // UTXO after a fork: rebuild from the (now-corrected) warehouse tables
     // as a fresh BASE version — the one full-table anti-join is the rare,
@@ -565,14 +602,13 @@ class ChainIngest(
       .select(utxoCols.head, utxoCols.tail: _*)
       .join(mainChainOnly(read(spark, "inputs")).select("boxId"),
         Seq("boxId"), "left_anti")
-    prof("commitBase")(commitBase(rebuilt))
+    commitBase(rebuilt)
     Files.deleteIfExists(rebuildMarker)
 
     // the rebuilt tail's max block is the chain tip the next batch chains
     // onto (or, for an all-loser tail, the seeded below-fork tip).
     cachedTip = newTip.orElse(tip)
     tipSeeded = true
-    }
   }
 
   /** Recursive delete (shared by partition drops and version retention). */
@@ -598,20 +634,10 @@ class ChainIngest(
   // view is base(maxBase) ∪ {delta adds > maxBase} ∖ {delta removes >
   // maxBase}.
 
-  private val utxoCols =
-    Seq("boxId", "txId", "blockId", "settlementHeight", "ergValue", "ergoTreeHash")
-
-  // explicit schemas: an empty delta writes no part files, and a schema-less
-  // parquet read of such a dir fails inference.
-  private val addsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("boxId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("txId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("blockId", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("settlementHeight", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("ergValue", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ergoTreeHash", org.apache.spark.sql.types.StringType)))
-  private val removesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("boxId", org.apache.spark.sql.types.StringType)))
+  /** The UTXO set's columns: the base and each delta's `adds` half. */
+  private val utxoSchema = StructType.fromDDL(
+    "boxId STRING, txId STRING, blockId STRING, settlementHeight INT, ergValue BIGINT, ergoTreeHash STRING")
+  private val utxoCols = utxoSchema.fieldNames.toSeq
 
   private def basePath(v: Long) = p(s"utxo/base/v=$v")
   private def deltaPath(v: Long) = p(s"utxo/delta/v=$v")
@@ -659,13 +685,14 @@ class ChainIngest(
     adds.write.mode(SaveMode.Overwrite).parquet(s"$tmp/adds")
     removes.write.mode(SaveMode.Overwrite).parquet(s"$tmp/removes")
     Files.move(Paths.get(tmp), Paths.get(deltaPath(v)))
-    // roll deltas into a new base once enough have accumulated — bounds the
-    // number of files the view unions AND gives the MVCC base cadence.
+  }
+
+  /** Roll deltas into a new base once enough have accumulated — bounds the
+    * number of files the view unions AND gives the MVCC base cadence.
+    */
+  private def compactUtxoIfDue(spark: SparkSession): Unit = {
     val live = deltaVersions().count(dv => dv > baseVersions().lastOption.getOrElse(-1L))
-    if (live >= compactEvery) {
-      val spark = adds.sparkSession
-      commitBase(utxo(spark))
-    } else cleanup()
+    if (live >= compactEvery) commitBase(utxo(spark)) else cleanup()
   }
 
   /** Drop versions outside the retention window (rollbackTo analog). The
@@ -699,13 +726,13 @@ class ChainIngest(
     if (baseV.isEmpty && liveDeltas.isEmpty)
       throw new IllegalStateException("no utxo snapshot yet")
     val adds = liveDeltas.map(v =>
-      spark.read.schema(addsSchema).parquet(s"${deltaPath(v)}/adds"))
+      spark.read.schema(utxoSchema).parquet(s"${deltaPath(v)}/adds"))
     val base = baseV.map(v => read(spark, "utxo/base", basePath(v)))
     val all = (base.toSeq ++ adds).reduce(_ unionByName _)
     if (liveDeltas.isEmpty) all
     else {
       val removes = liveDeltas
-        .map(v => spark.read.schema(removesSchema).parquet(s"${deltaPath(v)}/removes"))
+        .map(v => spark.read.schema(utxoSchema(Set("boxId"))).parquet(s"${deltaPath(v)}/removes"))
         .reduce(_ unionByName _)
       all.join(removes, Seq("boxId"), "left_anti")
     }
@@ -734,7 +761,7 @@ class ChainIngest(
         finally s.close()
       }
     }
-    val cols = addsSchema.fieldNames.mkString(", ")
+    val cols = utxoCols.mkString(", ")
     val addSelects =
       baseV.filter(v => hasParquet(basePath(v)))
         .map(v => s"SELECT $cols FROM parquet.`${basePath(v)}`").toSeq ++
@@ -784,17 +811,15 @@ class ChainIngest(
       reprocessFromRaw(spark, from)
       return true
     }
-    // a table dir can exist but be unreadable or empty mid-crash (only a
-    // _temporary/ left, or max() == null) — exactly those states read as
-    // tip -1: schema inference fails on a first read, and a read with a
-    // learned schema lists no files. Genuine I/O errors PROPAGATE: treating
-    // a transient read failure as "empty" would trigger a full destructive
-    // rebuild.
-    def tipOf(mk: => DataFrame, c: String): Int =
-      try {
-        val r = mk.agg(max(col(c))).head()
-        if (r.isNullAt(0)) -1 else r.getInt(0)
-      } catch { case _: org.apache.spark.sql.AnalysisException => -1 }
+    // a table dir can exist but hold no part file mid-crash (only a
+    // _temporary/ left) or no rows (max() == null) — both read as tip -1
+    // ([[read]] gives a root with no part file its known schema). Genuine
+    // I/O errors PROPAGATE: treating a transient read failure as "empty"
+    // would trigger a full destructive rebuild.
+    def tipOf(df: DataFrame, c: String): Int = {
+      val r = df.agg(max(col(c))).head()
+      if (r.isNullAt(0)) -1 else r.getInt(0)
+    }
     val rawTip = tipOf(read(spark, "raw"), "header.height")
     if (rawTip < 0) return false // raw itself empty/absent: nothing to replay from
     val tips = Seq(

@@ -2,6 +2,7 @@ package graft
 
 import graft.chain._
 import graft.streaming.ChainIngest
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -215,6 +216,101 @@ class EngineSpec extends AnyFunSuite {
     }
     Files.write(Paths.get(part), "not a parquet file".getBytes)
     intercept[org.apache.spark.SparkException](engine.heal())
+  }
+
+  /** Janino compiles of generated classes while `f` runs, JVM-wide. */
+  private def compilesIn(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("tip batches run interpreted: few compiles per append and fork; the caller's confs survive") {
+    import spark.implicits._
+    val (all, winnerIds) = ChainFixture.generateWithFork(forkAt = 20, shortLen = 4, longLen = 6)
+    val trunk = all.filter(_.header.height <= 20)
+    val loser = all.filter(b => b.header.height > 20 && !winnerIds.contains(b.header.id))
+    val winner = all.filter(b => winnerIds.contains(b.header.id))
+    val wh = Files.createTempDirectory("graft-interp").toString + "/warehouse"
+    val ingest = new ChainIngest(wh)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    def codegenConfs = keys.map(spark.conf.getAll.get)
+    spark.conf.set(keys.head, "true") // one key set, the other unset
+    try {
+      val prior = codegenConfs
+      ingest.processBatch(spark.createDataset(trunk), 0L)
+      val appends = loser.zipWithIndex.map { case (b, i) =>
+        compilesIn(ingest.processBatch(spark.createDataset(Seq(b)), i + 1L))
+      }
+      val fork = compilesIn(ingest.processBatch(spark.createDataset(winner), 9L))
+      info(s"compiles per 1-block append: ${appends.mkString(", ")}; fork batch: $fork")
+      // compiled, each 1-block append compiled ~200 classes and the fork ~275
+      assert(appends.drop(2).forall(_ <= 10),
+        s"1-block appends compiled ${appends.mkString(", ")} classes")
+      assert(fork <= 40, s"the fork batch compiled $fork classes")
+      assert(codegenConfs == prior)
+      assert(ingest.blocks(spark).select("blockId").as[String].collect().toSet ==
+        (trunk ++ winner).map(_.header.id).toSet)
+
+      val file = Files.createTempFile("graft-interp", ".not-a-dir")
+      intercept[Exception](new ChainIngest(s"$file/warehouse")
+        .processBatch(spark.createDataset(trunk.take(1)), 0L))
+      assert(codegenConfs == prior, "a failed batch must restore the confs too")
+    } finally spark.conf.unset(keys.head)
+  }
+
+  test("a new engine serves every lookup on a chain whose sparse tables hold no rows") {
+    import spark.implicits._
+    val chain = ChainFixture.generate(5).map(b => b.copy(transactions =
+      b.transactions.copy(transactions = b.transactions.transactions.map(tx =>
+        tx.copy(dataInputs = Nil, outputs = tx.outputs.map(o =>
+          o.copy(assets = Nil, additionalRegisters = Map.empty)))))))
+    val wh = Files.createTempDirectory("graft-sparse").toString + "/warehouse"
+    new ChainIngest(wh).processBatch(spark.createDataset(chain), 0L)
+    def parquetFiles(table: String): Int = {
+      val w = Files.walk(Paths.get(s"$wh/$table"))
+      try w.toArray.count(_.toString.endsWith(".parquet")) finally w.close()
+    }
+    Seq("tokens", "registers", "data_inputs", "assets").foreach(t =>
+      assert(parquetFiles(t) == 0, s"$t must hold no part file on this chain"))
+
+    val engine = new GraftEngine(spark, wh)
+    val tip = chain.last.header.id
+    val outs = chain.flatMap(_.transactions.transactions.flatMap(_.outputs))
+    val spent = chain.flatMap(_.transactions.transactions.flatMap(_.inputs.map(_.boxId))).toSet
+    val boxIds = outs.map(_.boxId)
+    val tree = outs.head.ergoTree
+    val hash = engine.tables.outputs.filter(col("boxId") === outs.head.boxId)
+      .select("ergoTreeHash").head.getString(0)
+    val address = engine.tables.ergoTrees.filter(col("hash") === hash)
+      .select("address").head.getString(0)
+    assert(engine.blockById(tip).count() == 1)
+    assert(engine.blocksByIds(chain.map(_.header.id)).count() == 5)
+    assert(engine.boxesByIds(UtxoQueries.Any, boxIds).count() == boxIds.size)
+    assert(engine.boxesByIds(UtxoQueries.Unspent, boxIds).count() ==
+      boxIds.count(id => !spent.contains(id)))
+    val byTree = outs.count(_.ergoTree == tree)
+    assert(engine.boxesByAddress(UtxoQueries.Any, address).count() == byTree)
+    assert(engine.boxesByErgoTreeHash(UtxoQueries.Any, hash).count() == byTree)
+    assert(engine.boxesByTokenId(UtxoQueries.Any, "no-such-token").count() == 0)
+    assert(engine.lastBlocks(5).count() == 5)
+    assert(engine.topAddressesByValue(3).count() > 0)
+    assert(engine.topAddressesByUtxoCount(3).count() > 0)
+    assert(engine.epochRollup.count() == 1)
+    assert(engine.blocksInRange(2, 4).count() == 3)
+    assert(engine.tokenHolders().count() == 0)
+    assert(!engine.heal())
+
+    // the known schemas are the stored ones, and knowing them runs no job
+    val known = new ChainIngest(backfilled)
+    val stored = new GraftEngine(spark, backfilled).tables
+    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(jobsIn(known.knownSchema(spark, "blocks")) == 0)
+    Seq("blocks" -> stored.blocks, "txs" -> stored.txs, "outputs" -> stored.outputs,
+      "inputs" -> stored.inputs, "assets" -> stored.assets, "data_inputs" -> stored.dataInputs,
+      "registers" -> stored.registers, "tokens" -> stored.tokens).foreach { case (t, df) =>
+      assert(known.knownSchema(spark, t).map(fields).contains(fields(df.schema)), t)
+    }
   }
 
   test("persistent catalog: a SECOND session queries warehouse and corpus by name") {
