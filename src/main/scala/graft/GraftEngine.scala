@@ -16,20 +16,20 @@ import org.apache.spark.sql.functions._
   * demand; at warehouse scale they'd be materialized by the ingest the same
   * way the entity tables are.
   *
-  * Read contract: each warehouse table's schema is learned once per engine
-  * instance, at the table's first read (through [[ChainIngest.read]]), and
-  * every later read reuses it without a schema-inference job; the file
-  * listing is fresh on every call, so a lookup always sees the latest
-  * committed batch, forks included.
-  */
-/** `feeTree`/`protocolTrees` configure the chain economics (defaults fit
+  * Read contract: every warehouse read declares its table's schema
+  * ([[ChainIngest.read]]), so no lookup runs a schema-inference job and a
+  * table with no rows yet reads as empty; the file listing is fresh on
+  * every call, so a lookup always sees the latest committed batch, forks
+  * included.
+  *
+  * `feeTree`/`protocolTrees` configure the chain economics (defaults fit
   * the synthetic fixture; pass `ChainConst.MainnetFeeTree` /
   * `ChainConst.MainnetProtocolTrees` for real-chain warehouses) — they
   * thread into every derivation the engine performs, INCLUDING the
   * heal/fork rebuild path, so a crash repair re-derives with the same
   * semantics the warehouse was built with.
-  */
-/** `trustMaterializedDims`: read the warehouse's materialized
+  *
+  * `trustMaterializedDims`: read the warehouse's materialized
   * ergo_trees/ergo_tree_t8s tables instead of deriving them from outputs.
   * Safe ONLY for warehouses that are immutable after their dims were
   * materialized (ChainWarehouse-style builds) — an ingest-active warehouse
@@ -58,9 +58,8 @@ class GraftEngine(spark: SparkSession, warehouse: String,
     * dims read from their materialized tables only under
     * [[trustMaterializedDims]] (immutable warehouses); otherwise they
     * derive from `outputs` on demand so further ingest can never serve
-    * stale dims. Each call lists the tables' files afresh; the schemas are
-    * the ones learned at this instance's first read of each table, so a
-    * call after the first runs no Spark job of its own.
+    * stale dims. Each call lists the tables' files afresh under their
+    * declared schemas, so it runs no Spark job of its own.
     */
   def tables: ChainTables = {
     def read(table: String) = ingest.read(spark, table)
@@ -204,12 +203,10 @@ class GraftEngine(spark: SparkSession, warehouse: String,
         // restarts without orphaned-location collisions. The root is scoped
         // BY PREFIX (r09 ADVICE): two prefixes sharing one v= chain meant
         // one prefix's GC could delete the dir the other prefix's view
-        // still reads; a pre-r10 unprefixed chain is migrated by
-        // swapSnapshotView to the first prefix that registers.
+        // still reads.
         GraftEngine.swapSnapshotView(spark, prefix + n, df,
           s"$warehouse/_catalog/$prefix$n",
-          Map(GraftEngine.CatalogVersionProp -> ver.toString),
-          legacyRoot = Some(s"$warehouse/_catalog/$n"))
+          Map(GraftEngine.CatalogVersionProp -> ver.toString))
       }
       consistent = ingest.currentUtxoVersion().getOrElse(-1L) == ver
     }
@@ -313,14 +310,6 @@ object GraftEngine {
     */
   val CatalogVersionProp = "graft.warehouse.version"
 
-  /** Materialize `df` under a fresh `root/v=<k>` dir and atomically swap
-    * the catalog entry `name` to a view over it (shared by the chain and
-    * corpus persistent catalogs). `CREATE OR REPLACE VIEW` is one catalog
-    * operation — concurrent readers either resolve the old snapshot (whose
-    * files survive one more swap) or the new one, never a missing table.
-    * The previous snapshot dir is retained for exactly one further swap
-    * (in-flight readers), older dirs are GC'd.
-    */
   /** One lock object per snapshot root: the list-versions → pick next →
     * write → swap → GC sequence is not safe to interleave (two concurrent
     * refreshes would compute the same `next`, overwrite each other's v=
@@ -371,9 +360,16 @@ object GraftEngine {
     } else (dest, true)
   }
 
+  /** Materialize `df` under a fresh `root/v=<k>` dir and atomically swap
+    * the catalog entry `name` to a view over it (shared by the chain and
+    * corpus persistent catalogs). `CREATE OR REPLACE VIEW` is one catalog
+    * operation — concurrent readers either resolve the old snapshot (whose
+    * files survive one more swap) or the new one, never a missing table.
+    * The previous snapshot dir is retained for exactly one further swap
+    * (in-flight readers), older dirs are GC'd.
+    */
   private[graft] def swapSnapshotView(spark: SparkSession, name: String,
-    df: DataFrame, root: String, props: Map[String, String] = Map.empty,
-    legacyRoot: Option[String] = None): Unit = {
+    df: DataFrame, root: String, props: Map[String, String] = Map.empty): Unit = {
     // Hadoop FS, not java.io — the snapshot root may be a `file:` URI (the
     // default corpus location derives from spark.sql.warehouse.dir) or, on
     // a real cluster, HDFS/S3A
@@ -381,17 +377,6 @@ object GraftEngine {
       .getFileSystem(spark.sessionState.newHadoopConf())
     val rootPath = fs.makeQualified(new org.apache.hadoop.fs.Path(root))
     snapshotLocks.getOrElseUpdate(rootPath.toString, new Object).synchronized {
-    // one-time migration from the pre-r10 unprefixed layout: the whole v=
-    // chain moves (one rename) under the first prefix that registers;
-    // later prefixes find no legacy dir and start their own chain at v=0
-    legacyRoot.filter(_ != root).foreach { lr =>
-      val lp = new org.apache.hadoop.fs.Path(lr)
-      if (!fs.exists(rootPath) && fs.exists(lp) &&
-        fs.listStatus(lp).exists(_.getPath.getName.startsWith("v="))) {
-        fs.mkdirs(rootPath.getParent)
-        fs.rename(lp, rootPath)
-      }
-    }
     val prevVs =
       if (!fs.exists(rootPath)) Seq.empty[Long]
       else fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
@@ -406,20 +391,6 @@ object GraftEngine {
       s".tmp-${java.util.UUID.randomUUID}")
     df.write.mode("overwrite").parquet(tmp.toString)
     val (servePath, _) = claimVersion(fs, rootPath, tmp, next)
-    // a legacy saveAsTable registration (pre-r09 build) blocks CREATE OR
-    // REPLACE VIEW with a name conflict — drop it once on upgrade (the
-    // one-time window this removes for every later refresh), and delete
-    // the old snapshot's part-files sitting directly in the root: the
-    // versioned GC below only walks v= dirs, so without this every
-    // upgraded catalog would carry one dead snapshot's data forever
-    if (spark.catalog.tableExists(name) &&
-      spark.catalog.getTable(name).tableType != "VIEW") {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      if (fs.exists(rootPath))
-        fs.listStatus(rootPath).toSeq
-          .filterNot(_.getPath.getName.startsWith("v="))
-          .foreach(st => fs.delete(st.getPath, true))
-    }
     val tblProps =
       if (props.isEmpty) ""
       else props.map { case (k, v) => s"'$k' = '$v'" }

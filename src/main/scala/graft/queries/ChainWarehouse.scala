@@ -73,7 +73,7 @@ object ChainWarehouse {
       // reference keeps the same per-script tables), and twenty queries
       // reading them pay a columnar scan, not twenty re-renderings.
       val (ergoTrees, t8) = BlockDerivation.scriptDims(
-        s.read.parquet(s"$Dir/outputs").drop("heightBucket"))
+        ing.read(s, "outputs").drop("heightBucket"))
       ergoTrees.write.mode("overwrite").parquet(s"$Dir/ergo_trees")
       t8.write.mode("overwrite").parquet(s"$Dir/ergo_tree_t8s")
       Files.writeString(marker, stamp)
@@ -82,13 +82,13 @@ object ChainWarehouse {
   }
 
   /** The warehouse read view as ChainTables — every table straight off
-    * parquet (the partition column dropped so the schema is identical to a
-    * direct derivation); nothing pinned in executor memory.
+    * parquet under its declared schema (the partition column dropped so the
+    * schema is identical to a direct derivation); nothing pinned in
+    * executor memory.
     */
   def tables(s: SparkSession): ChainTables = {
-    ensure(s)
-    def t(name: String): DataFrame =
-      s.read.parquet(s"$Dir/$name").drop("heightBucket")
+    val ing = ensure(s)
+    def t(name: String): DataFrame = ing.read(s, name).drop("heightBucket")
     ChainTables(
       blocks = t("blocks"),
       txs = t("txs"),
@@ -199,22 +199,16 @@ object ForkReplay {
     * warehouse. The previous scratch copy is reclaimed on the next call.
     */
   def replayFork(s: SparkSession): ChainIngest = synchronized {
-    def prof[A](l: String)(f: => A): A = {
-      if (sys.env.contains("GRAFT_PROF")) {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[prof]   $l%-24s ${(System.nanoTime()-t0)/1e9}%7.2f s"); r
-      } else f
-    }
-    prof("ensurePreFork")(ensurePreFork(s))
+    ensurePreFork(s)
     lastScratch.foreach(p => ChainWarehouse.rmTree(p.toString))
     val scratch = Files.createTempDirectory("graft-fork-replay")
     lastScratch = Some(scratch)
-    prof("copyTree")(copyTree(Paths.get(PreForkDir), scratch))
+    copyTree(Paths.get(PreForkDir), scratch)
     import s.implicits._
-    val (all, winners) = prof("fixture")(fixture())
+    val (all, winners) = fixture()
     val long = all.filter(b => winners.contains(b.header.id))
     val ing = ingestAt(scratch.toString)
-    prof("processBatch")(ing.processBatch(s.createDataset(long), 2L))
+    ing.processBatch(s.createDataset(long), 2L)
     ing
   }
 }

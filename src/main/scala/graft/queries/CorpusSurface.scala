@@ -114,10 +114,6 @@ object CorpusSurface {
         s.conf.get("spark.sql.warehouse.dir")
           .stripSuffix("/") + s"/_graft_corpus_catalog/$prefix")
       Seq("documents", "embeddings").foreach { n =>
-        // legacy CREATE TABLE registration (pre-r09) blocks the view swap
-        if (s.catalog.tableExists(prefix + n) &&
-          s.catalog.getTable(prefix + n).tableType != "VIEW")
-          s.sql(s"DROP TABLE IF EXISTS $prefix$n")
         s.sql(s"CREATE OR REPLACE VIEW $prefix$n AS " +
           s"SELECT * FROM parquet.`$sfDir/$n.parquet`")
       }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Lineage.LineageCut
 
 import graft.chain._
-import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -51,7 +51,10 @@ class ChainIngest(
     * entity tables. Mainline views ([[mainChainBlocks]], the UTXO state,
     * range scans through [[mainChainOnly]]) exclude flagged rows. The mode
     * must stay constant for a warehouse's lifetime (it changes the table
-    * schema). Cumulative/global-index columns on orphaned rows are
+    * schema). Reads declare the mode's schema rather than infer the files',
+    * so a warehouse opened in the wrong mode does not fail: a missing
+    * `mainChain` column reads as null and every mainline view returns no
+    * rows. Cumulative/global-index columns on orphaned rows are
     * branch-local values, meaningful only along the main chain.
     */
   val retainLosers: Boolean = false,
@@ -82,40 +85,20 @@ class ChainIngest(
   private def p(name: String) = s"$warehouse/$name"
   private def exists(name: String) = Files.exists(Paths.get(p(name)))
 
-  /** Schemas learned by [[read]], keyed by table name. */
-  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
-
-  /** Read a warehouse table. The table's first read in this instance infers
-    * its schema (one Spark job over a parquet footer); every later read
-    * passes the learned schema and runs no job until the query's own. The
-    * file listing and partition discovery still run on every call, so each
-    * read sees the latest committed files, including bucket dirs a fork
-    * deleted and rewrote. Sound because a warehouse's schema is fixed for
-    * its life ([[retainLosers]] must stay constant) and inference reads one
-    * footer, so it would return the learned schema again on every call.
-    * A root that holds no part file yet (a sparse table before its first
-    * row, a root emptied by a crash) has nothing to infer from: it reads as
-    * zero rows under the table's [[knownSchema]], and is inferred again at
-    * the next read. `path` defaults to the table's own dir; versioned
-    * tables (the UTXO base, one dir per `v=N`) key every version under one
-    * name.
+  /** Read a warehouse table under its [[knownSchema]], so no read infers a
+    * schema: a read runs no Spark job until the query's own, and a root that
+    * holds no part file yet (a sparse table before its first row, a root
+    * emptied by a crash) reads as zero rows. The file listing and partition
+    * discovery still run on every call, so each read sees the latest
+    * committed files, including bucket dirs a fork deleted and rewrote.
+    * `path` defaults to the table's own dir; the versioned tables (UTXO and
+    * hot-key bases and deltas) pass one version's dir.
     */
   private[graft] def read(spark: SparkSession, table: String): DataFrame =
     read(spark, table, p(table))
 
   private[graft] def read(spark: SparkSession, table: String, path: String): DataFrame =
-    schemas.get(table) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None =>
-        try {
-          val df = spark.read.parquet(path)
-          schemas.putIfAbsent(table, df.schema)
-          df
-        } catch {
-          case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-            spark.read.schema(knownSchema(spark, table).getOrElse(throw e)).parquet(path)
-        }
-    }
+    spark.read.schema(knownSchema(table)).parquet(path)
 
   /** The eight entity tables of a derivation, each with its height column. */
   private def entities(t: ChainTables): Seq[(String, DataFrame, String)] = Seq(
@@ -129,48 +112,57 @@ class ChainIngest(
     withBucket(flagged(df, main), heightCol).write.mode(SaveMode.Append)
       .partitionBy("heightBucket").parquet(p(name))
 
-  @volatile private var entitySchemas = Map.empty[String, StructType]
-
-  /** A stored table's schema, known without reading a file: an entity table
-    * as written (a derivation over no blocks — analysis only, no job — plus
-    * the retain-mode flag and the bucket column), raw from its encoder, the
-    * UTXO base from [[utxoSchema]].
+  /** Every stored table's schema, known without reading a file: raw from
+    * its encoder, the UTXO base and delta halves from [[utxoSchema]], the
+    * hot-key base and deltas from [[hotKeySchema]], and the rest from
+    * [[derivedSchemas]]. An unknown table name is a caller's bug and throws.
+    * The writers and these schemas are kept in step by a test that infers
+    * every table's files.
     */
-  private[graft] def knownSchema(spark: SparkSession, table: String): Option[StructType] = {
-    if (entitySchemas.isEmpty)
-      entitySchemas = entities(BlockDerivation.derive(
-        spark.emptyDataset(Encoders.product[RawBlock]), feeTree, protocolTrees))
-        .map { case (name, df, h) => name -> withBucket(flagged(df, main = true), h).schema }
-        .toMap
-    table match {
-      case "raw" => Some(Encoders.product[RawBlock].schema)
-      case "utxo/base" => Some(utxoSchema)
-      case _ => entitySchemas.get(table)
-    }
+  private[graft] def knownSchema(table: String): StructType = table match {
+    case "raw" => Encoders.product[RawBlock].schema
+    case "utxo/base" | "utxo/delta/adds" => utxoSchema
+    case "utxo/delta/removes" => utxoSchema(Set("boxId"))
+    case "hot_keys/base" | "hot_keys/delta" => hotKeySchema
+    case _ => derivedSchemas.getOrElse(table,
+      throw new IllegalArgumentException(s"no known schema for warehouse table $table"))
   }
 
-  /** Run `f` with a pin hook for [[BlockDerivation.derive]]'s shared
-    * sub-plans. The ingest paths fan one derivation out into 8 table writes
-    * plus tip/delta actions; unpinned, every action BOTH re-runs the
-    * UDF-heavy decode of the micro-batch AND re-pays Catalyst analysis and
-    * planning of the ~200-operator derivation plan (measured 3–10× wall on
-    * the fork path). `localCheckpoint` fixes both: partitions are computed
-    * once and the lineage is CUT, so each downstream action analyzes a
-    * 3-node LogicalRDD plan. The cut is eager, one job per pinned core
-    * before any table write: a lazy cut materialized by whichever of the
-    * concurrent writes finished first dropped the core's lineage while the
-    * other writes' tasks over it still ran, so their SQL metrics were
-    * already collected when those tasks reported ("non-existent
-    * accumulator"). Micro-batches are trigger-bounded, so the
-    * checkpointed partitions are small; Spark's ContextCleaner reclaims
-    * them once the batch's frames are unreachable. Trade-off (documented
-    * Spark behavior): a lost executor loses local checkpoints — recovery
-    * here is the STREAM's, not the plan's: foreachBatch redelivers the
-    * batch and both ingest paths are idempotent (raw is id-deduped; appends
-    * land on the fork path on replay).
+  /** The eight entity tables as written (a derivation over no blocks, plus
+    * the retain-mode flag and the bucket column) and the script dims
+    * ([[BlockDerivation.scriptDims]] over its outputs). Analysis only, no
+    * job; computed once per instance at the first read of such a table, so
+    * raw, UTXO and hot-key reads never pay for it.
     */
-  private def withPinned[A](f: (DataFrame => DataFrame) => A): A =
-    f(df => df.cutLineage())
+  private lazy val derivedSchemas: Map[String, StructType] = {
+    val t = BlockDerivation.derive(
+      SparkSession.active.emptyDataset(Encoders.product[RawBlock]), feeTree, protocolTrees)
+    val (ergoTrees, t8s) = BlockDerivation.scriptDims(t.outputs)
+    entities(t)
+      .map { case (name, df, h) => name -> withBucket(flagged(df, main = true), h).schema }
+      .toMap + ("ergo_trees" -> ergoTrees.schema) + ("ergo_tree_t8s" -> t8s.schema)
+  }
+
+  /** The pin hook for [[BlockDerivation.derive]]'s shared sub-plans. The
+    * ingest paths fan one derivation out into 8 table writes plus tip/delta
+    * actions; unpinned, every action BOTH re-runs the UDF-heavy decode of
+    * the micro-batch AND re-pays Catalyst analysis and planning of the
+    * ~200-operator derivation plan (measured 3–10× wall on the fork path).
+    * `localCheckpoint` fixes both: partitions are computed once and the
+    * lineage is CUT, so each downstream action analyzes a 3-node LogicalRDD
+    * plan. The cut is eager, one job per pinned core before any table
+    * write: a lazy cut materialized by whichever of the concurrent writes
+    * finished first dropped the core's lineage while the other writes'
+    * tasks over it still ran, so their SQL metrics were already collected
+    * when those tasks reported ("non-existent accumulator"). Micro-batches
+    * are trigger-bounded, so the checkpointed partitions are small; Spark's
+    * ContextCleaner reclaims them once the batch's frames are unreachable.
+    * Trade-off (documented Spark behavior): a lost executor loses local
+    * checkpoints — recovery here is the STREAM's, not the plan's:
+    * foreachBatch redelivers the batch and both ingest paths are idempotent
+    * (raw is id-deduped; appends land on the fork path on replay).
+    */
+  private val pinCore: DataFrame => DataFrame = _.cutLineage()
 
   /** Fan independent entity-table writes out concurrently. The 8 sinks
     * share nothing below the pinned derivation cores (materialized before
@@ -374,8 +366,8 @@ class ChainIngest(
     batch: Dataset[RawBlock], tip: Option[Row],
     minBatchHeight: Int, firstTs: Option[Long]): Unit = {
     val spark = batch.sparkSession
-    val (batchOutputs, batchInputIds) = interpreted(spark)(withPinned { pin =>
-      val t = BlockDerivation.derive(batch, feeTree, protocolTrees, pin)
+    val (batchOutputs, batchInputIds) = interpreted(spark) {
+      val t = BlockDerivation.derive(batch, feeTree, protocolTrees, pinCore)
       val (blocksShifted, txsShifted, outputsShifted) =
         shiftFromTip(t, tip, minBatchHeight, firstTs)
 
@@ -401,7 +393,7 @@ class ChainIngest(
       cachedTip = newTip.orElse(tip)
       tipSeeded = true
       (batchOutputs, batchInputIds)
-    })
+    }
     compactUtxoIfDue(spark)
 
     // K6 online learning: fold this batch's per-script box activity into
@@ -424,6 +416,9 @@ class ChainIngest(
   // threshold semantics tolerate that exactly like the reference's op
   // counters.
 
+  /** The hot-key base's and each delta's columns. */
+  private val hotKeySchema = StructType.fromDDL("ergoTreeHash STRING, ops BIGINT")
+
   private def hotBaseVs(): Seq[Long] = versionsIn("hot_keys/base")
   private def hotDeltaVs(): Seq[Long] = versionsIn("hot_keys/delta")
 
@@ -435,9 +430,9 @@ class ChainIngest(
 
   private def hotCountsView(spark: SparkSession): Option[DataFrame] = {
     val baseV = hotBaseVs().lastOption.getOrElse(-1L)
-    val parts =
-      hotBaseVs().lastOption.map(v => spark.read.parquet(p(s"hot_keys/base/v=$v"))).toSeq ++
-        hotDeltaVs().filter(_ > baseV).map(v => spark.read.parquet(p(s"hot_keys/delta/v=$v")))
+    def version(kind: String, v: Long) = read(spark, s"hot_keys/$kind", p(s"hot_keys/$kind/v=$v"))
+    val parts = hotBaseVs().lastOption.map(version("base", _)).toSeq ++
+      hotDeltaVs().filter(_ > baseV).map(version("delta", _))
     if (parts.isEmpty) None
     else Some(parts.reduce(_ unionByName _)
       .groupBy("ergoTreeHash").agg(sum("ops").as("ops")))
@@ -469,8 +464,7 @@ class ChainIngest(
     */
   def scriptOpCounts(spark: SparkSession): DataFrame =
     hotCountsView(spark).map(_.cutLineage())
-      .getOrElse(spark.emptyDataFrame
-        .select(lit("").as("ergoTreeHash"), lit(0L).as("ops")).limit(0))
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), hotKeySchema))
 
   /** The learned hot list: scripts whose cumulative ops exceed the
     * threshold — loaded from storage, so a RESTARTED ingest starts salted
@@ -492,12 +486,6 @@ class ChainIngest(
     graft.functions.SkewFunctions.saltedSumWithHotList(
       utxo(spark), "ergoTreeHash", "ergValue", learnedHotKeys(spark), salts)
 
-  /** Fork path (ST3): resolve the main chain over id-deduped raw, re-derive
-    * ONLY heights ≥ the fork bucket's floor, seed cumulative/gix offsets
-    * from the preceding bucket's stored tip, and overwrite only the
-    * affected heightBucket partitions (dynamic partition overwrite). Files
-    * in buckets below the fork bucket are never rewritten.
-    */
   /** Progress marker for the destructive rebuild: tip checks cannot protect
     * the SPARSE tables (tokens/registers/… legitimately lag the chain tip),
     * so a crash between dropBucketsFrom and the re-append is detected by
@@ -506,6 +494,12 @@ class ChainIngest(
     */
   private def rebuildMarker = Paths.get(p("_rebuild_from"))
 
+  /** Fork path (ST3): resolve the main chain over id-deduped raw, re-derive
+    * ONLY heights ≥ the fork bucket's floor, seed cumulative/gix offsets
+    * from the preceding bucket's stored tip, and overwrite only the
+    * affected heightBucket partitions (dynamic partition overwrite). Files
+    * in buckets below the fork bucket are never rewritten.
+    */
   private def reprocessFromRaw(spark: SparkSession, fromHeight: Int): Unit = {
     import spark.implicits._
     val forkBucket = math.max(fromHeight, 0) / bucketSize
@@ -548,8 +542,8 @@ class ChainIngest(
       if (forkBucket > 0) readTipFromStorage(spark, belowBucket = forkBucket)
       else None
 
-    val newTip = interpreted(spark)(withPinned { pin =>
-      val t = BlockDerivation.derive(tail, feeTree, protocolTrees, pin)
+    val newTip = interpreted(spark) {
+      val t = BlockDerivation.derive(tail, feeTree, protocolTrees, pinCore)
       val tailStats = tail.toDF().select(
         min(col("header.height")).as("minH"),
         min(struct(col("header.height"), col("header.timestamp")))
@@ -585,13 +579,13 @@ class ChainIngest(
       if (retainLosers && losers.nonEmpty) {
         val lt = BlockDerivation.derive(
           rangeDeduped.filter(col("header.id").isin(losers.toSeq: _*)).as[RawBlock],
-          feeTree, protocolTrees, pin)
+          feeTree, protocolTrees, pinCore)
         parallelCommit(entities(lt).map {
           case (name, df, heightCol) => () => appendEntity(name, df, heightCol, main = false)
         })
       }
       newTip
-    })
+    }
 
     // UTXO after a fork: rebuild from the (now-corrected) warehouse tables
     // as a fresh BASE version — the one full-table anti-join is the rare,
@@ -725,14 +719,13 @@ class ChainIngest(
     val liveDeltas = deltaVersions().filter(v => v > baseV.getOrElse(-1L))
     if (baseV.isEmpty && liveDeltas.isEmpty)
       throw new IllegalStateException("no utxo snapshot yet")
-    val adds = liveDeltas.map(v =>
-      spark.read.schema(utxoSchema).parquet(s"${deltaPath(v)}/adds"))
+    val adds = liveDeltas.map(v => read(spark, "utxo/delta/adds", s"${deltaPath(v)}/adds"))
     val base = baseV.map(v => read(spark, "utxo/base", basePath(v)))
     val all = (base.toSeq ++ adds).reduce(_ unionByName _)
     if (liveDeltas.isEmpty) all
     else {
       val removes = liveDeltas
-        .map(v => spark.read.schema(utxoSchema(Set("boxId"))).parquet(s"${deltaPath(v)}/removes"))
+        .map(v => read(spark, "utxo/delta/removes", s"${deltaPath(v)}/removes"))
         .reduce(_ unionByName _)
       all.join(removes, Seq("boxId"), "left_anti")
     }
@@ -813,7 +806,7 @@ class ChainIngest(
     }
     // a table dir can exist but hold no part file mid-crash (only a
     // _temporary/ left) or no rows (max() == null) — both read as tip -1
-    // ([[read]] gives a root with no part file its known schema). Genuine
+    // ([[read]] declares the schema, so no part file means no rows). Genuine
     // I/O errors PROPAGATE: treating a transient read failure as "empty"
     // would trigger a full destructive rebuild.
     def tipOf(df: DataFrame, c: String): Int = {

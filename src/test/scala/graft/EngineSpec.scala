@@ -151,16 +151,15 @@ class EngineSpec extends AnyFunSuite {
     assert(math.abs(prSum - 1.0) < 1e-3, s"pagerank mass $prSum must be ~1")
   }
 
-  test("a lookup after the first tables call runs one Spark job: schemas are learned once") {
-    val engine = new GraftEngine(spark, backfilled)
-    engine.tables
+  test("a new engine's first lookup runs one Spark job: no read infers a schema") {
     val tipId = new GraftEngine(spark, backfilled).lastBlocks(1)
       .select("blockId").head.getString(0)
+    val engine = new GraftEngine(spark, backfilled)
     val jobs = jobsIn {
       engine.tables
       assert(engine.blockById(tipId).collect().length == 1)
     }
-    assert(jobs == 1, s"tables + blockById submitted $jobs jobs; schema inference must not re-run")
+    assert(jobs == 1, s"a new engine's tables + blockById submitted $jobs jobs; no read may infer")
   }
 
   test("a long-lived engine answers like a new one across an append and a fork; heal unchanged") {
@@ -198,8 +197,8 @@ class EngineSpec extends AnyFunSuite {
     assert(afterFork(2).size == 1, "the winning tip must be visible after the fork")
     assert(afterFork.last.map(_.getAs[Int]("height")) == (24 to 20 by -1))
 
-    // heal through the long-lived engine, whose schemas are learned: a table
-    // root with no part files still reads as tip -1 and is rebuilt ...
+    // heal through the long-lived engine: a table root with no part files
+    // reads as tip -1 and is rebuilt ...
     ChainIngest.rmTree(s"$wh/txs")
     Files.createDirectories(Paths.get(s"$wh/txs"))
     assert(engine.tables.txs.count() == 0)
@@ -301,16 +300,45 @@ class EngineSpec extends AnyFunSuite {
     assert(engine.tokenHolders().count() == 0)
     assert(!engine.heal())
 
-    // the known schemas are the stored ones, and knowing them runs no job
-    val known = new ChainIngest(backfilled)
-    val stored = new GraftEngine(spark, backfilled).tables
-    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.map(f => f.name -> f.dataType).toSeq
-    assert(jobsIn(known.knownSchema(spark, "blocks")) == 0)
-    Seq("blocks" -> stored.blocks, "txs" -> stored.txs, "outputs" -> stored.outputs,
-      "inputs" -> stored.inputs, "assets" -> stored.assets, "data_inputs" -> stored.dataInputs,
-      "registers" -> stored.registers, "tokens" -> stored.tokens).foreach { case (t, df) =>
-      assert(known.knownSchema(spark, t).map(fields).contains(fields(df.schema)), t)
+    // a new instance derives the entity schemas cold, and that runs no job
+    assert(jobsIn(new ChainIngest(backfilled).knownSchema("blocks")) == 0)
+  }
+
+  test("every stored table's files infer to its known schema, default and retain mode") {
+    // a declared column missing from the files would read as silent nulls,
+    // so the writers and knownSchema are checked against plain inference
+    def hasParts(dir: String): Boolean = Files.exists(Paths.get(dir)) && {
+      val w = Files.walk(Paths.get(dir))
+      try w.anyMatch(_.toString.endsWith(".parquet")) finally w.close()
     }
+    def versions(dir: String): Seq[String] =
+      if (!Files.exists(Paths.get(dir))) Nil
+      else new java.io.File(dir).list().toSeq.filter(_.matches("v=\\d+")).map(v => s"$dir/$v")
+    val entities = Set("blocks", "txs", "outputs", "inputs", "assets", "data_inputs",
+      "registers", "tokens")
+    def checked(ing: ChainIngest, wh: String): Set[String] = {
+      val stored = (entities ++ Seq("raw", "ergo_trees", "ergo_tree_t8s")).toSeq
+        .map(t => t -> s"$wh/$t") ++
+        versions(s"$wh/utxo/base").map("utxo/base" -> _) ++
+        versions(s"$wh/utxo/delta").flatMap(v =>
+          Seq("utxo/delta/adds" -> s"$v/adds", "utxo/delta/removes" -> s"$v/removes")) ++
+        versions(s"$wh/hot_keys/base").map("hot_keys/base" -> _) ++
+        versions(s"$wh/hot_keys/delta").map("hot_keys/delta" -> _)
+      stored.filter { case (_, dir) => hasParts(dir) }.map { case (t, dir) =>
+        assert(spark.read.parquet(dir).schema.catalogString ==
+          ing.knownSchema(t).catalogString, s"$t at $dir")
+        t
+      }.toSet
+    }
+    val dims = Set("ergo_trees", "ergo_tree_t8s")
+    val all = entities ++ dims ++ Set("raw", "utxo/base", "utxo/delta/adds",
+      "utxo/delta/removes", "hot_keys/base", "hot_keys/delta")
+    assert(checked(queries.ChainWarehouse.ensure(spark), queries.ChainWarehouse.Dir) == all)
+    // the retain-mode fixture materializes no script dims and folds no
+    // hot-key base in its three batches; neither schema depends on the mode
+    val retain = queries.ForkReplay.ensureRetain(spark)
+    assert(retain.retainLosers)
+    assert(checked(retain, queries.ForkReplay.RetainDir) == all -- dims - "hot_keys/base")
   }
 
   test("persistent catalog: a SECOND session queries warehouse and corpus by name") {
