@@ -106,24 +106,31 @@ class GraftEngine(spark: SparkSession, warehouse: String,
     */
   def registerViews(prefix: String = "graft_"): Unit = {
     val t = tables
-    Seq("blocks", "txs", "outputs", "inputs", "assets", "data_inputs",
-      "registers", "tokens").foreach { n =>
-      spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $prefix$n AS " +
-        s"SELECT * FROM parquet.`$warehouse/$n`")
-    }
-    spark.sql(
-      s"""CREATE OR REPLACE TEMPORARY VIEW ${prefix}spent_boxes AS
-         SELECT o.* FROM ${prefix}outputs o
-         WHERE EXISTS (SELECT 1 FROM ${prefix}inputs i WHERE i.boxId = o.boxId)""")
-    spark.sql(
-      s"""CREATE OR REPLACE TEMPORARY VIEW ${prefix}utxo_live AS
-         SELECT o.* FROM ${prefix}outputs o
-         WHERE NOT EXISTS (SELECT 1 FROM ${prefix}inputs i WHERE i.boxId = o.boxId)""")
+    registerTableViews(prefix, "TEMPORARY VIEW")
     Seq(
       "ergo_trees" -> t.ergoTrees, "ergo_tree_t8s" -> t.ergoTreeT8s,
       "utxo" -> utxos, "utxo_by_script" -> utxosByScript,
       "tx_edges" -> txEdges
     ).foreach { case (n, df) => df.createOrReplaceTempView(prefix + n) }
+  }
+
+  /** The SQL-text tier shared by [[registerViews]] (`kind` =
+    * `TEMPORARY VIEW`) and [[registerCatalog]] (`VIEW`): the eight stored
+    * entity tables as views over their `parquet.` paths, and `spent_boxes`/
+    * `utxo_live` over those.
+    */
+  private def registerTableViews(prefix: String, kind: String): Unit = {
+    Seq("blocks", "txs", "outputs", "inputs", "assets", "data_inputs",
+      "registers", "tokens").foreach { n =>
+      spark.sql(s"CREATE OR REPLACE $kind $prefix$n AS " +
+        s"SELECT * FROM parquet.`$warehouse/$n`")
+    }
+    Seq("spent_boxes" -> "EXISTS", "utxo_live" -> "NOT EXISTS").foreach { case (n, pred) =>
+      spark.sql(
+        s"""CREATE OR REPLACE $kind $prefix$n AS
+           SELECT o.* FROM ${prefix}outputs o
+           WHERE $pred (SELECT 1 FROM ${prefix}inputs i WHERE i.boxId = o.boxId)""")
+    }
   }
 
   /** PERSISTENT-catalog registration — the "always on" form of
@@ -162,19 +169,7 @@ class GraftEngine(spark: SparkSession, warehouse: String,
     * the warehouse has actually advanced.
     */
   def registerCatalog(prefix: String = "graft_"): Unit = {
-    Seq("blocks", "txs", "outputs", "inputs", "assets", "data_inputs",
-      "registers", "tokens").foreach { n =>
-      spark.sql(s"CREATE OR REPLACE VIEW $prefix$n AS " +
-        s"SELECT * FROM parquet.`$warehouse/$n`")
-    }
-    spark.sql(
-      s"""CREATE OR REPLACE VIEW ${prefix}spent_boxes AS
-         SELECT o.* FROM ${prefix}outputs o
-         WHERE EXISTS (SELECT 1 FROM ${prefix}inputs i WHERE i.boxId = o.boxId)""")
-    spark.sql(
-      s"""CREATE OR REPLACE VIEW ${prefix}utxo_live AS
-         SELECT o.* FROM ${prefix}outputs o
-         WHERE NOT EXISTS (SELECT 1 FROM ${prefix}inputs i WHERE i.boxId = o.boxId)""")
+    registerTableViews(prefix, "VIEW")
     // Pinned tier, with a CONSISTENT stamp (r09 VERDICT #5): the warehouse
     // version is read BEFORE pinning/snapshotting and re-checked AFTER —
     // an ingest commit landing mid-registration would otherwise leave the

@@ -49,14 +49,4 @@ object ForkResolver {
     if (losers.isEmpty) raw
     else raw.filter(!col("header.id").isin(losers.toSeq: _*))
   }
-
-  /** K4 analog: flag instead of filter (Cassandra soft-delete
-    * CassandraBlockUpdater.scala:21-57 keeps losing blocks with
-    * main_chain=false).
-    */
-  def withMainChainFlag(raw: Dataset[RawBlock], window: Int = 100): DataFrame = {
-    val losers = losingBlockIds(raw.toDF(), window)
-    raw.toDF().withColumn("mainChain",
-      if (losers.isEmpty) lit(true) else !col("header.id").isin(losers.toSeq: _*))
-  }
 }

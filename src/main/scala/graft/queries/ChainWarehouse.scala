@@ -46,9 +46,23 @@ object ChainWarehouse {
   val LayoutVersion = 2
 
   private def stamp = s"${ChainOracle.CacheFormatVersion}-$LayoutVersion"
-  private def marker = Paths.get(s"$Dir/_graft_warehouse_version")
 
-  private[queries] def rmTree(path: String): Unit = ChainIngest.rmTree(path)
+  /** Reuse the disk-cached build under `dir` when its `marker` file holds
+    * the current [[stamp]] and the build reached its `blocks` table;
+    * otherwise wipe `dir`, run `build`, then write the marker (last, so an
+    * interrupted build is redone).
+    */
+  private[queries] def cachedBuild(dir: String, marker: String)(build: => Unit): Unit = {
+    val stampFile = Paths.get(s"$dir/$marker")
+    val valid = Files.exists(stampFile) &&
+      scala.util.Try(Files.readString(stampFile).trim).toOption.contains(stamp) &&
+      Files.exists(Paths.get(s"$dir/blocks"))
+    if (!valid) {
+      ChainIngest.rmTree(dir)
+      build
+      Files.writeString(stampFile, stamp)
+    }
+  }
 
   private def ingest(): ChainIngest =
     new ChainIngest(Dir, bucketSize = BucketSize, compactEvery = CompactEvery)
@@ -57,12 +71,8 @@ object ChainWarehouse {
     * [[ChainIngest.utxo]] / [[ChainIngest.rangeScan]] views the queries use.
     */
   def ensure(s: SparkSession): ChainIngest = synchronized {
-    val valid = Files.exists(marker) &&
-      scala.util.Try(Files.readString(marker).trim).toOption.contains(stamp) &&
-      Files.exists(Paths.get(s"$Dir/blocks"))
     val ing = ingest()
-    if (!valid) {
-      rmTree(Dir)
+    cachedBuild(Dir, "_graft_warehouse_version") {
       import s.implicits._
       ChainFixture.generate(ChainQueries.FixtureBlocks)
         .grouped(BatchSize).zipWithIndex
@@ -76,7 +86,6 @@ object ChainWarehouse {
         ing.read(s, "outputs").drop("heightBucket"))
       ergoTrees.write.mode("overwrite").parquet(s"$Dir/ergo_trees")
       t8.write.mode("overwrite").parquet(s"$Dir/ergo_tree_t8s")
-      Files.writeString(marker, stamp)
     }
     ing
   }
@@ -115,12 +124,19 @@ object ForkReplay {
 
   val PreForkDir: String = s"${ChainOracle.Dir}/fork-prefork"
 
-  private def stamp = s"${ChainOracle.CacheFormatVersion}-${ChainWarehouse.LayoutVersion}"
-  private def marker = Paths.get(s"$PreForkDir/_graft_prefork_version")
   private var lastScratch: Option[java.nio.file.Path] = None
 
-  private def fixture() = ChainFixture.generateWithFork(
-    ChainQueries.ForkAt, ChainQueries.ForkShortLen, ChainQueries.ForkLongLen)
+  /** The fork fixture split into its trunk (heights ≤ `ForkAt`), the short
+    * losing branch, and the long winning branch.
+    */
+  private def branches(): (Seq[RawBlock], Seq[RawBlock], Seq[RawBlock]) = {
+    val (all, winnerIds) = ChainFixture.generateWithFork(
+      ChainQueries.ForkAt, ChainQueries.ForkShortLen, ChainQueries.ForkLongLen)
+    val winners = winnerIds.toSet
+    val (trunk, branched) = all.partition(_.header.height <= ChainQueries.ForkAt)
+    val (long, short) = branched.partition(b => winners.contains(b.header.id))
+    (trunk, short, long)
+  }
 
   private def ingestAt(dir: String) = new ChainIngest(dir,
     bucketSize = ChainWarehouse.BucketSize,
@@ -131,20 +147,12 @@ object ForkReplay {
     * moment the longer branch arrives.
     */
   def ensurePreFork(s: SparkSession): Unit = synchronized {
-    val valid = Files.exists(marker) &&
-      scala.util.Try(Files.readString(marker).trim).toOption.contains(stamp) &&
-      Files.exists(Paths.get(s"$PreForkDir/blocks"))
-    if (!valid) {
-      ChainWarehouse.rmTree(PreForkDir)
+    ChainWarehouse.cachedBuild(PreForkDir, "_graft_prefork_version") {
       import s.implicits._
-      val (all, winners) = fixture()
-      val trunk = all.filter(_.header.height <= ChainQueries.ForkAt)
-      val short = all.filter(b =>
-        b.header.height > ChainQueries.ForkAt && !winners.contains(b.header.id))
+      val (trunk, short, _) = branches()
       val ing = ingestAt(PreForkDir)
       ing.processBatch(s.createDataset(trunk), 0L)
       ing.processBatch(s.createDataset(short), 1L)
-      Files.writeString(marker, stamp)
     }
   }
 
@@ -168,28 +176,18 @@ object ForkReplay {
     * the post-resolution state is what q114 reads.
     */
   val RetainDir: String = s"${ChainOracle.Dir}/fork-retain"
-  private def retainMarker = Paths.get(s"$RetainDir/_graft_retain_version")
 
   def ensureRetain(s: SparkSession): ChainIngest = synchronized {
     val ing = new ChainIngest(RetainDir,
       bucketSize = ChainWarehouse.BucketSize,
       compactEvery = ChainWarehouse.CompactEvery,
       retainLosers = true)
-    val valid = Files.exists(retainMarker) &&
-      scala.util.Try(Files.readString(retainMarker).trim).toOption.contains(stamp) &&
-      Files.exists(Paths.get(s"$RetainDir/blocks"))
-    if (!valid) {
-      ChainWarehouse.rmTree(RetainDir)
+    ChainWarehouse.cachedBuild(RetainDir, "_graft_retain_version") {
       import s.implicits._
-      val (all, winners) = fixture()
-      val trunk = all.filter(_.header.height <= ChainQueries.ForkAt)
-      val short = all.filter(b =>
-        b.header.height > ChainQueries.ForkAt && !winners.contains(b.header.id))
-      val long = all.filter(b => winners.contains(b.header.id))
+      val (trunk, short, long) = branches()
       ing.processBatch(s.createDataset(trunk), 0L)
       ing.processBatch(s.createDataset(short), 1L)
       ing.processBatch(s.createDataset(long), 2L)
-      Files.writeString(retainMarker, stamp)
     }
     ing
   }
@@ -200,13 +198,12 @@ object ForkReplay {
     */
   def replayFork(s: SparkSession): ChainIngest = synchronized {
     ensurePreFork(s)
-    lastScratch.foreach(p => ChainWarehouse.rmTree(p.toString))
+    lastScratch.foreach(p => ChainIngest.rmTree(p.toString))
     val scratch = Files.createTempDirectory("graft-fork-replay")
     lastScratch = Some(scratch)
     copyTree(Paths.get(PreForkDir), scratch)
     import s.implicits._
-    val (all, winners) = fixture()
-    val long = all.filter(b => winners.contains(b.header.id))
+    val (_, _, long) = branches()
     val ing = ingestAt(scratch.toString)
     ing.processBatch(s.createDataset(long), 2L)
     ing

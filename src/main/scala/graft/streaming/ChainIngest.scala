@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Streaming chain ingest (SURVEY.md §2.9 ST1–ST4): a Structured Streaming
   * source of raw blocks driven through `foreachBatch`, maintaining the
@@ -27,8 +27,26 @@ import java.nio.file.{Files, Paths}
   *  - a FORK (incoming height ≤ stored tip, or competing same-height blocks
   *    in one batch) rebuilds ONLY `heightBucket ≥ fork bucket`: the winning
   *    chain's tail is re-derived with cumulative/global-index offsets seeded
-  *    from the last untouched bucket's tip, and written with dynamic
-  *    partition overwrite — files in earlier buckets are never touched.
+  *    from the last untouched bucket's tip, and written after those buckets
+  *    are dropped — files in earlier buckets are never touched.
+  *
+  * One commit path: both kinds of batch write their derived range through
+  * [[writeRange]], and the UTXO and hot-key stores publish, list, resolve
+  * and GC their versions through the same routines ([[publish]], [[live]],
+  * [[cleanup]]). A batch's commit points, in order:
+  *  1. the raw append (`raw/`);
+  *  2. fork path only: the rebuild marker `_rebuild_from` is published;
+  *  3. the eight entity-table appends, in one concurrent fan-out (fork path:
+  *     each table's buckets ≥ the fork bucket are dropped first; retain
+  *     mode: a second fan-out then appends the losers flagged);
+  *  4. the UTXO commit: a delta `utxo/delta/v=N` (append path) or a rebuilt
+  *     base `utxo/base/v=N` (fork path), each published by one rename;
+  *  5. fork path only: the rebuild marker is deleted;
+  *  6. append path only: UTXO compaction (a new base once `compactEvery`
+  *     deltas are live), then the hot-key delta `hot_keys/delta/v=N` (and a
+  *     hot-key base when due).
+  * The in-memory tip carry is assigned after the UTXO commit (after 5 on
+  * the fork path), and a failure anywhere drops it.
   *
   * Checkpointing replaces the reference's Initializer integrity check: the
   * source offset and the tables advance together in foreachBatch, and
@@ -226,23 +244,32 @@ class ChainIngest(
   @volatile private var tipSeeded = false
   private[graft] var tipSeedReads = 0 // test hook: storage reads of the tip
 
-  /** Max heightBucket partition of `name` strictly below `below` — a single
-    * directory listing, no Spark job.
+  /** Carry `tip` to the next batch as the stored chain tip. */
+  private def carryTip(tip: Option[Row]): Unit = { cachedTip = tip; tipSeeded = true }
+
+  /** The paths of the entries of dir `path`, none if it does not exist — a
+    * single directory listing, no Spark job. Every listing of the
+    * warehouse (height buckets, store versions, staging dirs, part files)
+    * goes through it.
     */
-  private def maxBucketOf(name: String, below: Int = Int.MaxValue): Option[Int] = {
-    val root = Paths.get(p(name))
-    if (!Files.exists(root)) None
+  private def ls(path: String): Seq[String] = {
+    val dir = Paths.get(path)
+    if (!Files.exists(dir)) Nil
     else {
-      val stream = Files.list(root)
-      try {
-        val buckets = stream.toArray.map(_.toString)
-          .filter(_.contains("heightBucket="))
-          .flatMap(d => d.substring(d.lastIndexOf('=') + 1).toIntOption)
-          .filter(_ < below)
-        if (buckets.isEmpty) None else Some(buckets.max)
-      } finally stream.close()
+      val stream = Files.list(dir)
+      try stream.toArray.toSeq.map(_.toString)
+      finally stream.close()
     }
   }
+
+  /** The heightBucket partition dirs of table `name`, each with its bucket. */
+  private def bucketsOf(name: String): Seq[(Int, String)] =
+    ls(p(name)).filter(_.contains("heightBucket="))
+      .flatMap(d => d.substring(d.lastIndexOf('=') + 1).toIntOption.map(_ -> d))
+
+  /** Max heightBucket partition of `name` strictly below `below`. */
+  private def maxBucketOf(name: String, below: Int = Int.MaxValue): Option[Int] =
+    bucketsOf(name).map(_._1).filter(_ < below).maxOption
 
   /** The tip seeding scan, pruned to one partition: the max-height row can
     * only live in the max heightBucket, so everything below it is never
@@ -284,16 +311,7 @@ class ChainIngest(
     */
   def processBatch(batch: Dataset[RawBlock], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // one aggregate pass over the batch: its size, lowest height,
-    // duplicate-height detection, and the lowest block's timestamp (min
-    // over (height, ts) structs — deterministic under same-height forks,
-    // unlike a sort+take).
-    val stats = interpreted(spark)(batch.toDF().select(
-      count(lit(1)).as("n"),
-      min(col("header.height")).as("minH"),
-      countDistinct(col("header.height")).as("nh"),
-      min(struct(col("header.height"), col("header.timestamp")))
-        .getField("timestamp").as("firstTs")).head())
+    val stats = interpreted(spark)(rangeStats(batch))
     if (stats.getAs[Long]("n") == 0) return
     interpreted(spark)(batch.toDF().write.mode(SaveMode.Append).parquet(p("raw")))
 
@@ -301,7 +319,7 @@ class ChainIngest(
     // the previous batch; only a fresh instance (start / restart / post-heal)
     // pays the one pruned seeding read.
     val tip: Option[Row] = {
-      if (!tipSeeded) { cachedTip = readTipFromStorage(spark); tipSeeded = true }
+      if (!tipSeeded) carryTip(readTipFromStorage(spark))
       cachedTip
     }
 
@@ -313,8 +331,7 @@ class ChainIngest(
 
     try {
       if (isFork) reprocessFromRaw(spark, minBatchHeight)
-      else appendIncremental(batch, tip, minBatchHeight,
-        if (stats.isNullAt(3)) None else Some(stats.getAs[Long]("firstTs")))
+      else appendIncremental(batch, tip, stats)
     } catch {
       // a batch that failed mid-write may have advanced the stored tables
       // past the carried tip — drop the cache so the retry reseeds from
@@ -323,77 +340,97 @@ class ChainIngest(
     }
   }
 
+  /** One aggregate pass over a range of raw blocks: its size `n`, lowest
+    * height `minH`, number of distinct heights `nh` (fewer than `n` means
+    * competing same-height blocks), and the lowest block's timestamp
+    * `firstTs` (min over (height, ts) structs — deterministic under
+    * same-height forks, unlike a sort+take).
+    */
+  private def rangeStats(range: Dataset[RawBlock]): Row = range.toDF().select(
+    count(lit(1)).as("n"),
+    min(col("header.height")).as("minH"),
+    countDistinct(col("header.height")).as("nh"),
+    min(struct(col("header.height"), col("header.timestamp")))
+      .getField("timestamp").as("firstTs")).head()
+
   /** Shift a freshly-derived (tail or batch) table set so its cumulative and
-    * global-index columns continue from `tip` (the stored block the new rows
-    * chain onto) — the `BlockBuilder(prev)` carry. `minHeight`/`firstTs`
-    * identify the new range's lowest block for the mining-time boundary:
-    * its in-derivation lag is null, so its true blockMiningTime
-    * (firstTs − tip timestamp) is patched in and folded into the cumulative.
+    * global-index columns continue from the seed's tip (the stored block the
+    * new rows chain onto) — the `BlockBuilder(prev)` carry. The seed's
+    * [[rangeStats]] identify the new range's lowest block for the
+    * mining-time boundary: its in-derivation lag is null, so its true
+    * blockMiningTime (firstTs − tip timestamp) is patched in and folded into
+    * the cumulative. Without a seed (the chain's first range, or retained
+    * losers) the derivation's own values stand.
     */
-  private def shiftFromTip(
-    t: ChainTables, tip: Option[Row],
-    minHeight: Int, firstTs: Option[Long]): (DataFrame, DataFrame, DataFrame) = {
-    val (txBase, boxBase) = tip
-      .map(r => (r.getAs[Long]("maxTxGix") + 1, r.getAs[Long]("maxBoxGix") + 1))
-      .getOrElse((0L, 0L))
-    val cumulativeCols = Seq(
-      "blockChainTotalSize", "totalTxsCount", "totalMiningTime",
-      "totalFees", "totalMinersReward", "totalCoinsInTxs")
-
-    val blocksShifted0 = cumulativeCols.foldLeft(t.blocks) { case (df, c) =>
-      tip.map(r => df.withColumn(c, col(c) + r.getAs[Long](c))).getOrElse(df)
-    }
-      .withColumn("maxTxGix", col("maxTxGix") + txBase)
-      .withColumn("maxBoxGix", col("maxBoxGix") + boxBase)
-    val blocksShifted = tip.map { r =>
-      val firstDelta = firstTs.map(_ - r.getAs[Long]("timestamp")).getOrElse(0L)
-      val firstH = col("height") === lit(minHeight)
-      blocksShifted0
-        .withColumn("blockMiningTime",
-          when(firstH, lit(firstDelta)).otherwise(col("blockMiningTime")))
+  private def shiftFromTip(t: ChainTables, seed: Option[(Row, Row)]): ChainTables =
+    seed.fold(t) { case (tip, stats) =>
+      val txBase = tip.getAs[Long]("maxTxGix") + 1
+      val boxBase = tip.getAs[Long]("maxBoxGix") + 1
+      val firstDelta =
+        if (stats.isNullAt(stats.fieldIndex("firstTs"))) 0L
+        else stats.getAs[Long]("firstTs") - tip.getAs[Long]("timestamp")
+      val cumulativeCols = Seq(
+        "blockChainTotalSize", "totalTxsCount", "totalMiningTime",
+        "totalFees", "totalMinersReward", "totalCoinsInTxs")
+      val blocks = cumulativeCols
+        .foldLeft(t.blocks) { case (df, c) => df.withColumn(c, col(c) + tip.getAs[Long](c)) }
+        .withColumn("maxTxGix", col("maxTxGix") + txBase)
+        .withColumn("maxBoxGix", col("maxBoxGix") + boxBase)
+        .withColumn("blockMiningTime", when(col("height") === lit(stats.getAs[Int]("minH")),
+          lit(firstDelta)).otherwise(col("blockMiningTime")))
         .withColumn("totalMiningTime", col("totalMiningTime") + firstDelta)
-    }.getOrElse(blocksShifted0)
-
-    (blocksShifted,
-      t.txs.withColumn("globalIndex", col("globalIndex") + txBase),
-      t.outputs.withColumn("globalIndex", col("globalIndex") + boxBase))
-  }
-
-  /** Common path: derive the batch alone, shift by the stored tip, append,
-    * and commit the batch's UTXO add/remove delta.
-    */
-  private def appendIncremental(
-    batch: Dataset[RawBlock], tip: Option[Row],
-    minBatchHeight: Int, firstTs: Option[Long]): Unit = {
-    val spark = batch.sparkSession
-    val (batchOutputs, batchInputIds) = interpreted(spark) {
-      val t = BlockDerivation.derive(batch, feeTree, protocolTrees, pinCore)
-      val (blocksShifted, txsShifted, outputsShifted) =
-        shiftFromTip(t, tip, minBatchHeight, firstTs)
-
-      // next batch's tip, computed from the micro-batch's own rows (a
-      // batch-sized TakeOrdered) — assigned only after every write commits.
-      val newTip = blocksShifted.orderBy(desc("height")).limit(1)
-        .collect().headOption
-
-      parallelCommit(entities(t.copy(
-        blocks = blocksShifted, txs = txsShifted, outputs = outputsShifted)).map {
-        case (name, df, heightCol) => () => appendEntity(name, df, heightCol, main = true)
-      })
-
-      // K2 delta commit: adds = batch outputs not spent in-batch; removes =
-      // batch inputs that spend pre-batch boxes. View-level soundness needs
-      // box ids to never recur — guaranteed by the protocol (a box id hashes
-      // its creating tx).
-      val batchOutputs = t.outputs.select(utxoCols.head, utxoCols.tail: _*)
-      val batchInputIds = t.inputs.select("boxId")
-      commitDelta(
-        adds = batchOutputs.join(batchInputIds, Seq("boxId"), "left_anti"),
-        removes = batchInputIds.join(batchOutputs.select("boxId"), Seq("boxId"), "left_anti"))
-      cachedTip = newTip.orElse(tip)
-      tipSeeded = true
-      (batchOutputs, batchInputIds)
+      t.copy(blocks = blocks,
+        txs = t.txs.withColumn("globalIndex", col("globalIndex") + txBase),
+        outputs = t.outputs.withColumn("globalIndex", col("globalIndex") + boxBase))
     }
+
+  /** Write one derived range of the chain — the entity writes of both the
+    * append and the fork path. Derives `range` with [[pinCore]], shifts it
+    * from `seed` ([[shiftFromTip]]), collects its top block (a range-sized
+    * TakeOrdered; a losers' range, `main = false`, carries no tip, so none
+    * is collected), then appends the eight entity tables in one
+    * [[parallelCommit]], flagged `main` in retain mode. With `dropFrom`
+    * (the fork path) each table's buckets ≥ `dropFrom` are dropped first.
+    * Every plan here is over the batch or the rebuilt tail, so it all runs
+    * [[interpreted]]. Returns the tables as written and the top block; the
+    * caller carries the top only after its UTXO commit.
+    */
+  private def writeRange(range: Dataset[RawBlock], seed: Option[(Row, Row)],
+    main: Boolean = true, dropFrom: Option[Int] = None): (ChainTables, Option[Row]) =
+    interpreted(range.sparkSession) {
+      val t = shiftFromTip(BlockDerivation.derive(range, feeTree, protocolTrees, pinCore), seed)
+      val top = if (main) t.blocks.orderBy(desc("height")).limit(1).collect().headOption else None
+      // Explicit bucket deletion, NOT dynamic partition overwrite: a sparse
+      // table (tokens, data_inputs, registers…) can have ZERO winner rows in
+      // a rebuilt bucket, and dynamic overwrite would then leave the losing
+      // branch's stale partition in place — phantom tokens, and stale inputs
+      // that corrupt the UTXO anti-join. Delete-then-append is not atomic; a
+      // crash in between leaves the table tip behind raw, which heal()
+      // detects and repairs.
+      parallelCommit(entities(t).map { case (name, df, heightCol) => () =>
+        dropFrom.foreach(dropBucketsFrom(name, _))
+        appendEntity(name, df, heightCol, main)
+      })
+      (t, top)
+    }
+
+  /** Common path: write the batch alone, shifted by the stored tip, and
+    * commit the batch's UTXO add/remove delta.
+    */
+  private def appendIncremental(batch: Dataset[RawBlock], tip: Option[Row], stats: Row): Unit = {
+    val spark = batch.sparkSession
+    val (t, top) = writeRange(batch, tip.map(_ -> stats))
+
+    // K2 delta commit: adds = batch outputs not spent in-batch; removes =
+    // batch inputs that spend pre-batch boxes. View-level soundness needs
+    // box ids to never recur — guaranteed by the protocol (a box id hashes
+    // its creating tx).
+    val batchOutputs = t.outputs.select(utxoCols.head, utxoCols.tail: _*)
+    val batchInputIds = t.inputs.select("boxId")
+    interpreted(spark)(commitDelta(
+      adds = batchOutputs.join(batchInputIds, Seq("boxId"), "left_anti"),
+      removes = batchInputIds.join(batchOutputs.select("boxId"), Seq("boxId"), "left_anti")))
+    carryTip(top.orElse(tip))
     compactUtxoIfDue(spark)
 
     // K6 online learning: fold this batch's per-script box activity into
@@ -403,36 +440,26 @@ class ChainIngest(
   }
 
   // ---- K6/S6: learned hot-key list (supernode detection) ----
-  // Counters use the UTXO store's base+delta commit discipline: each batch
-  // appends only its OWN batch-sized ops delta (atomic tmp+rename), and
-  // every `compactEvery` deltas fold into a new consolidated base — the
-  // base rename is the commit point, so a crash anywhere leaves a
-  // consistent view (base ∪ deltas-above-base) and per-batch cost never
-  // grows with the accumulated distinct-script count. Counted activity is
-  // what the batch alone observes: box creations per script plus in-batch
-  // spends — no historical join on the ingest hot path (a removal-heavy
-  // script always registered its creations first). The counter is a
-  // heuristic learner (a redelivered batch may double-count); the
-  // threshold semantics tolerate that exactly like the reference's op
-  // counters.
+  // Counters are a versioned store like the UTXO set (`hot_keys/`): each
+  // batch appends only its OWN batch-sized ops delta, and every
+  // `compactEvery` deltas fold into a new consolidated base — the base
+  // publish is the commit point, so a crash anywhere leaves a consistent
+  // view (base ∪ deltas-above-base) and per-batch cost never grows with
+  // the accumulated distinct-script count. Counted activity is what the
+  // batch alone observes: box creations per script plus in-batch spends —
+  // no historical join on the ingest hot path (a removal-heavy script
+  // always registered its creations first). The counter is a heuristic
+  // learner (a redelivered batch may double-count); the threshold
+  // semantics tolerate that exactly like the reference's op counters.
 
   /** The hot-key base's and each delta's columns. */
   private val hotKeySchema = StructType.fromDDL("ergoTreeHash STRING, ops BIGINT")
 
-  private def hotBaseVs(): Seq[Long] = versionsIn("hot_keys/base")
-  private def hotDeltaVs(): Seq[Long] = versionsIn("hot_keys/delta")
-
-  private def writeHot(df: DataFrame, kind: String, v: Long): Unit = {
-    val tmp = p(s"hot_keys/$kind/v=$v.tmp")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    Files.move(Paths.get(tmp), Paths.get(p(s"hot_keys/$kind/v=$v")))
-  }
-
   private def hotCountsView(spark: SparkSession): Option[DataFrame] = {
-    val baseV = hotBaseVs().lastOption.getOrElse(-1L)
-    def version(kind: String, v: Long) = read(spark, s"hot_keys/$kind", p(s"hot_keys/$kind/v=$v"))
-    val parts = hotBaseVs().lastOption.map(version("base", _)).toSeq ++
-      hotDeltaVs().filter(_ > baseV).map(version("delta", _))
+    val (baseV, deltas) = live("hot_keys")
+    def version(kind: String, v: Long) =
+      read(spark, s"hot_keys/$kind", versionDir("hot_keys", kind, v))
+    val parts = baseV.map(version("base", _)).toSeq ++ deltas.map(version("delta", _))
     if (parts.isEmpty) None
     else Some(parts.reduce(_ unionByName _)
       .groupBy("ergoTreeHash").agg(sum("ops").as("ops")))
@@ -445,17 +472,11 @@ class ChainIngest(
       .unionAll(batchOutputs.join(batchInputIds, Seq("boxId"), "left_semi")
         .select("ergoTreeHash"))
       .groupBy("ergoTreeHash").agg(count(lit(1)).as("ops"))
-    val v = (hotBaseVs() ++ hotDeltaVs()).maxOption.getOrElse(-1L) + 1
-    interpreted(spark)(writeHot(batchOps, "delta", v))
-    val baseV = hotBaseVs().lastOption.getOrElse(-1L)
-    val staleDeltas = hotDeltaVs().filter(_ <= baseV) // crashed pre-GC leftovers
-    val liveDeltas = hotDeltaVs().filter(_ > baseV)
-    if (liveDeltas.size >= compactEvery) {
-      val merged = hotCountsView(spark).get.cutLineage() // pin pre-delete
-      writeHot(merged, "base", v + 1) // the commit point
-      (liveDeltas ++ staleDeltas).foreach(d => rm(p(s"hot_keys/delta/v=$d")))
-      hotBaseVs().dropRight(1).foreach(b => rm(p(s"hot_keys/base/v=$b")))
-    } else staleDeltas.foreach(d => rm(p(s"hot_keys/delta/v=$d")))
+    interpreted(spark)(
+      commitVersion("hot_keys", "delta")(batchOps.write.mode(SaveMode.Overwrite).parquet(_)))
+    if (live("hot_keys")._2.size >= compactEvery) commitVersion("hot_keys", "base")(
+      hotCountsView(spark).get.write.mode(SaveMode.Overwrite).parquet(_))
+    cleanup("hot_keys")
   }
 
   /** The persisted per-script op counters (the K6 report's input) — an
@@ -496,25 +517,18 @@ class ChainIngest(
 
   /** Fork path (ST3): resolve the main chain over id-deduped raw, re-derive
     * ONLY heights ≥ the fork bucket's floor, seed cumulative/gix offsets
-    * from the preceding bucket's stored tip, and overwrite only the
-    * affected heightBucket partitions (dynamic partition overwrite). Files
-    * in buckets below the fork bucket are never rewritten.
+    * from the preceding bucket's stored tip, and rewrite only the affected
+    * heightBucket partitions through [[writeRange]]. Files in buckets below
+    * the fork bucket are never rewritten.
     */
   private def reprocessFromRaw(spark: SparkSession, fromHeight: Int): Unit = {
     import spark.implicits._
     val forkBucket = math.max(fromHeight, 0) / bucketSize
     val rebuildFrom = forkBucket.toLong * bucketSize
-    // marker published atomically (tmp + rename) — a truncated marker would
-    // read as "rebuild from 0" and trigger a needless full rebuild.
+    // marker published atomically — a truncated marker would read as
+    // "rebuild from 0" and trigger a needless full rebuild.
     Files.createDirectories(Paths.get(warehouse))
-    val markerTmp = Paths.get(p("_rebuild_from.tmp"))
-    Files.writeString(markerTmp, fromHeight.toString)
-    // ATOMIC_MOVE makes a non-atomic fallback (copy+delete on a foreign
-    // FileSystem provider) throw instead of silently reopening the
-    // truncated-marker crash window.
-    Files.move(markerTmp, rebuildMarker,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    publish(rebuildMarker.toString)(tmp => Files.writeString(Paths.get(tmp), fromHeight.toString))
     val raw = read(spark, "raw")
     // losers are resolved from the tip WINDOW only (a driver walk over
     // ≤window*4 header rows; duplicate ids are collapsed by the walk's
@@ -537,55 +551,24 @@ class ChainIngest(
     // seed from the last block BELOW the rebuilt range (untouched buckets
     // are correct by induction) — read pruned to the max surviving bucket;
     // the tail's own lowest block supplies the mining-time boundary
-    // timestamp.
+    // timestamp. A fork in the first bucket has no tip below it, and so
+    // nothing to shift from and no tail stats to take.
     val tip: Option[Row] =
       if (forkBucket > 0) readTipFromStorage(spark, belowBucket = forkBucket)
       else None
+    val (_, top) = writeRange(tail, tip.map(_ -> interpreted(spark)(rangeStats(tail))),
+      dropFrom = Some(forkBucket))
 
-    val newTip = interpreted(spark) {
-      val t = BlockDerivation.derive(tail, feeTree, protocolTrees, pinCore)
-      val tailStats = tail.toDF().select(
-        min(col("header.height")).as("minH"),
-        min(struct(col("header.height"), col("header.timestamp")))
-          .getField("timestamp").as("firstTs")).head()
-      val (blocksShifted, txsShifted, outputsShifted) =
-        if (tailStats.isNullAt(0)) (t.blocks, t.txs, t.outputs)
-        else shiftFromTip(t, tip, tailStats.getAs[Int]("minH"),
-          Some(tailStats.getAs[Long]("firstTs")))
-
-      // Explicit bucket deletion, NOT dynamic partition overwrite: a sparse
-      // table (tokens, data_inputs, registers…) can have ZERO winner rows in
-      // a rebuilt bucket, and dynamic overwrite would then leave the losing
-      // branch's stale partition in place — phantom tokens, and stale inputs
-      // that corrupt the UTXO anti-join. Delete-then-append is not atomic; a
-      // crash in between leaves the table tip behind raw, which heal()
-      // detects and repairs.
-      // cachedTip is only ASSIGNED after every write commits.
-      val newTip = blocksShifted.orderBy(desc("height")).limit(1).collect().headOption
-      parallelCommit(entities(t.copy(
-        blocks = blocksShifted, txs = txsShifted, outputs = outputsShifted)).map {
-        case (name, df, heightCol) => () =>
-          dropBucketsFrom(name, forkBucket)
-          appendEntity(name, df, heightCol, main = true)
-      })
-
-      // Soft-delete retention: the losing branch's rows are re-derived and
-      // appended flagged mainChain=false — the dropBucketsFrom above wiped
-      // any previously-flagged orphans in the rebuilt range, and every
-      // still-relevant orphan is in the tip-window loser set (consensus
-      // bounds fork depth, so orphans older than the window sit in untouched
-      // buckets). Derivation of the losers is unseeded: cumulative/gix
-      // columns on orphans are branch-local (documented on [[retainLosers]]).
-      if (retainLosers && losers.nonEmpty) {
-        val lt = BlockDerivation.derive(
-          rangeDeduped.filter(col("header.id").isin(losers.toSeq: _*)).as[RawBlock],
-          feeTree, protocolTrees, pinCore)
-        parallelCommit(entities(lt).map {
-          case (name, df, heightCol) => () => appendEntity(name, df, heightCol, main = false)
-        })
-      }
-      newTip
-    }
+    // Soft-delete retention: the losing branch's rows are re-derived and
+    // appended flagged mainChain=false — the bucket drop above wiped any
+    // previously-flagged orphans in the rebuilt range, and every
+    // still-relevant orphan is in the tip-window loser set (consensus
+    // bounds fork depth, so orphans older than the window sit in untouched
+    // buckets). Derivation of the losers is unseeded: cumulative/gix
+    // columns on orphans are branch-local (documented on [[retainLosers]]).
+    if (retainLosers && losers.nonEmpty)
+      writeRange(rangeDeduped.filter(col("header.id").isin(losers.toSeq: _*)).as[RawBlock],
+        seed = None, main = false)
 
     // UTXO after a fork: rebuild from the (now-corrected) warehouse tables
     // as a fresh BASE version — the one full-table anti-join is the rare,
@@ -601,130 +584,129 @@ class ChainIngest(
 
     // the rebuilt tail's max block is the chain tip the next batch chains
     // onto (or, for an all-loser tail, the seeded below-fork tip).
-    cachedTip = newTip.orElse(tip)
-    tipSeeded = true
+    carryTip(top.orElse(tip))
   }
 
   /** Recursive delete (shared by partition drops and version retention). */
   private def rm(path: String): Unit = ChainIngest.rmTree(path)
 
   /** Delete every heightBucket partition dir ≥ `fromBucket` of `name`. */
-  private def dropBucketsFrom(name: String, fromBucket: Int): Unit = {
-    val root = Paths.get(p(name))
-    if (Files.exists(root)) {
-      val stream = Files.list(root)
-      try stream.toArray.map(_.toString)
-        .filter(_.contains("heightBucket="))
-        .filter(d => d.substring(d.lastIndexOf('=') + 1).toIntOption.exists(_ >= fromBucket))
-        .foreach(rm)
-      finally stream.close()
-    }
+  private def dropBucketsFrom(name: String, fromBucket: Int): Unit =
+    bucketsOf(name).filter(_._1 >= fromBucket).foreach { case (_, d) => rm(d) }
+
+  /** Publish `target` atomically: `write` fills `<target>.tmp`, then one
+    * rename makes it visible, so a crash mid-write leaves only an invisible
+    * `.tmp` (never read as a version, swept by [[cleanup]]) — never a
+    * half-written version dir that [[live]] would accept, nor a truncated
+    * rebuild marker. ATOMIC_MOVE makes a non-atomic fallback (copy+delete on
+    * a foreign FileSystem provider) throw instead of silently reopening
+    * that crash window. Serves the UTXO and hot-key bases and deltas and
+    * the rebuild marker.
+    */
+  private def publish(target: String)(write: String => Unit): Unit = {
+    val tmp = s"$target.tmp"
+    write(tmp)
+    Files.move(Paths.get(tmp), Paths.get(target),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  // ---- UTXO state: base snapshots + per-batch deltas (MVCC revisions) ----
-  // Versions are one monotonic counter across bases and deltas: every commit
+  // ---- versioned stores: base snapshots + per-batch deltas (MVCC revisions) ----
+  // The UTXO set (`utxo/`) and the hot-key counters (`hot_keys/`) are each
+  // a store of `base/v=N` and `delta/v=N` version dirs. Versions are one
+  // monotonic counter across a store's bases and deltas: every commit
   // writes max+1, so a commit can never overwrite data its own lazy plan is
   // reading, and heal/backfill/stream interleavings stay ordered. The live
-  // view is base(maxBase) ∪ {delta adds > maxBase} ∖ {delta removes >
-  // maxBase}.
+  // view is the newest base plus the deltas above it ([[live]]).
+
+  /** The versions in store dir `dir`, ascending — strict `v=<digits>`
+    * only: an in-flight `v=N.tmp` (pre-rename commit) must never be visible
+    * as a version.
+    */
+  private def versionsIn(dir: String): Seq[Long] =
+    ls(p(dir)).map(s => s.substring(s.lastIndexOf('/') + 1))
+      .collect { case v if v.matches("v=\\d+") => v.drop(2).toLong }.sorted
+
+  /** The dir of version `v` of a store's `kind` (`base` or `delta`). */
+  private def versionDir(store: String, kind: String, v: Long) = p(s"$store/$kind/v=$v")
+
+  private def latestVersion(store: String): Option[Long] =
+    (versionsIn(s"$store/base") ++ versionsIn(s"$store/delta")).maxOption
+
+  /** A store's live set: its newest base, if any, and the deltas above it. */
+  private def live(store: String): (Option[Long], Seq[Long]) = {
+    val base = versionsIn(s"$store/base").lastOption
+    (base, versionsIn(s"$store/delta").filter(_ > base.getOrElse(-1L)))
+  }
+
+  /** Publish the store's next version as `kind` (see [[publish]]). */
+  private def commitVersion(store: String, kind: String)(write: String => Unit): Unit =
+    publish(versionDir(store, kind, latestVersion(store).getOrElse(-1L) + 1))(write)
+
+  /** Drop a store's versions outside the retention window (rollbackTo
+    * analog). The newest base is always retained, and deltas ABOVE the
+    * newest base are never touched — they are the live view regardless of
+    * any retention setting (deleting one would silently lose a batch's
+    * adds). Abandoned mid-commit staging dirs are cleared.
+    */
+  private def cleanup(store: String): Unit = {
+    val keepFloor = latestVersion(store).getOrElse(-1L) - keepVersions + 1
+    val bases = versionsIn(s"$store/base")
+    bases.filter(v => v < keepFloor && !bases.lastOption.contains(v))
+      .foreach(v => rm(versionDir(store, "base", v)))
+    versionsIn(s"$store/delta")
+      .filter(v => bases.lastOption.exists(v <= _) && v < keepFloor)
+      .foreach(v => rm(versionDir(store, "delta", v)))
+    Seq("delta", "base").foreach(kind =>
+      ls(p(s"$store/$kind")).filter(_.endsWith(".tmp")).foreach(rm))
+  }
 
   /** The UTXO set's columns: the base and each delta's `adds` half. */
   private val utxoSchema = StructType.fromDDL(
     "boxId STRING, txId STRING, blockId STRING, settlementHeight INT, ergValue BIGINT, ergoTreeHash STRING")
   private val utxoCols = utxoSchema.fieldNames.toSeq
 
-  private def basePath(v: Long) = p(s"utxo/base/v=$v")
-  private def deltaPath(v: Long) = p(s"utxo/delta/v=$v")
+  private def basePath(v: Long) = versionDir("utxo", "base", v)
+  private def deltaPath(v: Long) = versionDir("utxo", "delta", v)
 
-  private def versionsIn(dir: String): Seq[Long] = {
-    val path = Paths.get(p(dir))
-    if (!Files.exists(path)) Nil
-    else {
-      val stream = Files.list(path)
-      // strict v=<digits> only: an in-flight `v=N.tmp` (pre-rename delta
-      // commit) must never be visible as a version.
-      try stream.toArray.toSeq.map(_.toString)
-        .flatMap { s =>
-          val tail = s.substring(s.lastIndexOf('/') + 1)
-          if (tail.matches("v=\\d+")) Some(tail.drop(2).toLong) else None
-        }.sorted
-      finally stream.close()
-    }
-  }
-
-  private def baseVersions(): Seq[Long] = versionsIn("utxo/base")
-  private def deltaVersions(): Seq[Long] = versionsIn("utxo/delta")
-
-  def currentUtxoVersion(): Option[Long] =
-    (baseVersions() ++ deltaVersions()).sorted.lastOption
-
-  private def nextVersion(): Long = currentUtxoVersion().getOrElse(-1L) + 1
+  def currentUtxoVersion(): Option[Long] = latestVersion("utxo")
 
   private def commitBase(df: DataFrame): Unit = {
-    // same atomic-publish discipline as deltas: a crash mid-write must not
-    // leave a half-written dir that versionsIn() accepts as the newest base.
-    val v = nextVersion()
-    val tmp = s"${basePath(v)}.tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    Files.move(Paths.get(tmp), Paths.get(basePath(v)))
-    cleanup()
+    commitVersion("utxo", "base")(df.write.mode(SaveMode.Overwrite).parquet(_))
+    cleanup("utxo")
   }
 
-  private def commitDelta(adds: DataFrame, removes: DataFrame): Unit = {
-    val v = nextVersion()
-    // stage both halves in a tmp dir, then one atomic rename publishes the
-    // delta — a crash mid-commit leaves only an invisible `v=N.tmp`, never
-    // a half-delta that would crash utxo()/heal().
-    val tmp = s"${deltaPath(v)}.tmp"
-    adds.write.mode(SaveMode.Overwrite).parquet(s"$tmp/adds")
-    removes.write.mode(SaveMode.Overwrite).parquet(s"$tmp/removes")
-    Files.move(Paths.get(tmp), Paths.get(deltaPath(v)))
-  }
+  /** Both halves are staged in one dir, so one rename publishes the delta —
+    * never a half-delta that would crash utxo()/heal().
+    */
+  private def commitDelta(adds: DataFrame, removes: DataFrame): Unit =
+    commitVersion("utxo", "delta") { tmp =>
+      adds.write.mode(SaveMode.Overwrite).parquet(s"$tmp/adds")
+      removes.write.mode(SaveMode.Overwrite).parquet(s"$tmp/removes")
+    }
 
   /** Roll deltas into a new base once enough have accumulated — bounds the
     * number of files the view unions AND gives the MVCC base cadence.
     */
-  private def compactUtxoIfDue(spark: SparkSession): Unit = {
-    val live = deltaVersions().count(dv => dv > baseVersions().lastOption.getOrElse(-1L))
-    if (live >= compactEvery) commitBase(utxo(spark)) else cleanup()
-  }
+  private def compactUtxoIfDue(spark: SparkSession): Unit =
+    if (live("utxo")._2.size >= compactEvery) commitBase(utxo(spark)) else cleanup("utxo")
 
-  /** Drop versions outside the retention window (rollbackTo analog). The
-    * newest base is always retained, and deltas ABOVE the newest base are
-    * never touched — they are the live view regardless of any retention
-    * setting (deleting one would silently lose a batch's adds).
-    */
-  private def cleanup(): Unit = {
-    val keepFloor = currentUtxoVersion().getOrElse(-1L) - keepVersions + 1
-    val latestBase = baseVersions().lastOption
-    baseVersions().filter(v => v < keepFloor && !latestBase.contains(v))
-      .foreach(v => rm(basePath(v)))
-    deltaVersions()
-      .filter(v => latestBase.exists(v <= _) && v < keepFloor)
-      .foreach(v => rm(deltaPath(v)))
-    // clear any abandoned mid-commit staging dirs
-    Seq("utxo/delta", "utxo/base").foreach { d =>
-      val root = Paths.get(p(d))
-      if (Files.exists(root)) {
-        val stream = Files.list(root)
-        try stream.toArray.map(_.toString).filter(_.endsWith(".tmp")).foreach(rm)
-        finally stream.close()
-      }
-    }
+  /** The UTXO store's live set; throws before its first commit. */
+  private def liveUtxo(): (Option[Long], Seq[Long]) = {
+    val (baseV, deltas) = live("utxo")
+    if (baseV.isEmpty && deltas.isEmpty)
+      throw new IllegalStateException("no utxo snapshot yet")
+    (baseV, deltas)
   }
 
   /** The live UTXO view: base ∪ later adds ∖ later removes. */
   def utxo(spark: SparkSession): DataFrame = {
-    val baseV = baseVersions().lastOption
-    val liveDeltas = deltaVersions().filter(v => v > baseV.getOrElse(-1L))
-    if (baseV.isEmpty && liveDeltas.isEmpty)
-      throw new IllegalStateException("no utxo snapshot yet")
-    val adds = liveDeltas.map(v => read(spark, "utxo/delta/adds", s"${deltaPath(v)}/adds"))
+    val (baseV, deltas) = liveUtxo()
+    val adds = deltas.map(v => read(spark, "utxo/delta/adds", s"${deltaPath(v)}/adds"))
     val base = baseV.map(v => read(spark, "utxo/base", basePath(v)))
     val all = (base.toSeq ++ adds).reduce(_ unionByName _)
-    if (liveDeltas.isEmpty) all
+    if (deltas.isEmpty) all
     else {
-      val removes = liveDeltas
+      val removes = deltas
         .map(v => read(spark, "utxo/delta/removes", s"${deltaPath(v)}/removes"))
         .reduce(_ unionByName _)
       all.join(removes, Seq("boxId"), "left_anti")
@@ -742,29 +724,15 @@ class ChainIngest(
     * of THIS version set.
     */
   def utxoViewSql(): String = {
-    val baseV = baseVersions().lastOption
-    val liveDeltas = deltaVersions().filter(v => v > baseV.getOrElse(-1L))
-    if (baseV.isEmpty && liveDeltas.isEmpty)
-      throw new IllegalStateException("no utxo snapshot yet")
-    def hasParquet(dir: String): Boolean = {
-      val path = Paths.get(dir)
-      Files.exists(path) && {
-        val s = Files.list(path)
-        try s.anyMatch(f => f.toString.endsWith(".parquet"))
-        finally s.close()
-      }
-    }
-    val cols = utxoCols.mkString(", ")
-    val addSelects =
-      baseV.filter(v => hasParquet(basePath(v)))
-        .map(v => s"SELECT $cols FROM parquet.`${basePath(v)}`").toSeq ++
-        liveDeltas.filter(v => hasParquet(s"${deltaPath(v)}/adds"))
-          .map(v => s"SELECT $cols FROM parquet.`${deltaPath(v)}/adds`")
+    val (baseV, deltas) = liveUtxo()
+    def selects(cols: String, dirs: Seq[String]): Seq[String] =
+      dirs.filter(ls(_).exists(_.endsWith(".parquet")))
+        .map(d => s"SELECT $cols FROM parquet.`$d`")
+    val addSelects = selects(utxoCols.mkString(", "),
+      baseV.map(basePath).toSeq ++ deltas.map(v => s"${deltaPath(v)}/adds"))
     require(addSelects.nonEmpty, "utxo snapshot holds no readable rows yet")
     val union = addSelects.mkString(" UNION ALL ")
-    val remSelects = liveDeltas
-      .filter(v => hasParquet(s"${deltaPath(v)}/removes"))
-      .map(v => s"SELECT boxId FROM parquet.`${deltaPath(v)}/removes`")
+    val remSelects = selects("boxId", deltas.map(v => s"${deltaPath(v)}/removes"))
     if (remSelects.isEmpty) union
     else s"SELECT u.* FROM ($union) u LEFT ANTI JOIN " +
       s"(${remSelects.mkString(" UNION ALL ")}) r ON u.boxId = r.boxId"

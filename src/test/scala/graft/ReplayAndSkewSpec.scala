@@ -138,7 +138,10 @@ class ReplayAndSkewSpec extends AnyFunSuite {
     // compactEvery=2 so 3 batches force a counter CONSOLIDATION (deltas
     // folded into a base) mid-run — totals must survive it
     val ing = new ChainIngest(wh, hotKeyThreshold = 10, compactEvery = 2)
-    val all = ChainFixture.generate(60)
+    // the 60-block trunk is ChainFixture.generate(60); its two branches
+    // arrive later as one fork batch
+    val (forked, _) = ChainFixture.generateWithFork(forkAt = 60, shortLen = 2, longLen = 3)
+    val all = forked.filter(_.header.height <= 60)
     all.grouped(20).zipWithIndex.foreach { case (b, i) =>
       ing.processBatch(spark.createDataset(b), i.toLong)
     }
@@ -156,6 +159,13 @@ class ReplayAndSkewSpec extends AnyFunSuite {
     val totalOps = ing.scriptOpCounts(spark)
       .agg(sum("ops")).head.getLong(0)
     assert(totalOps >= t.outputs.count(), "consolidated counters lost ops")
+
+    // a fork batch is not counted: the counters and the list stay as learned
+    def counts() = ing.scriptOpCounts(spark).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val learnedCounts = counts()
+    ing.processBatch(spark.createDataset(forked.filter(_.header.height > 60)), 3L)
+    assert(counts() == learnedCounts, "a fork batch changed the op counters")
 
     // RESTART: a fresh instance over the same warehouse loads the same list
     // from storage (the reference persists its learned list the same way)

@@ -3,6 +3,7 @@ package graft
 import graft.chain._
 import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -295,18 +296,35 @@ class StreamingSpec extends AnyFunSuite {
 
   test("utxo delta commits + compaction equal the anti-join rebuild at every batch") {
     import spark.implicits._
-    val all = ChainFixture.generate(40)
+    // the 40-block trunk is ChainFixture.generate(40); the branches above
+    // it end the test with a fork batch
+    val (forked, winnerIds) = ChainFixture.generateWithFork(forkAt = 40, shortLen = 2, longLen = 4)
+    val all = forked.filter(_.header.height <= 40)
     // compactEvery=3 forces at least two base roll-ups over 8 batches
     val ingest = new ChainIngest(tmpDir("graft-utxo-delta"), compactEvery = 3)
+    def boxIds(blocks: Seq[RawBlock]): Set[String] = UtxoQueries.utxos(
+      BlockDerivation.derive(spark.createDataset(blocks)))
+      .select("boxId").collect().map(_.getString(0)).toSet
+    // the SQL-text pin (what registerCatalog registers) must read the same
+    // boxes, row for row, as the DataFrame view it renders
+    def assertSqlPinMatches(when: String): Unit = {
+      def rows(df: DataFrame) = df.select(ingest.utxo(spark).columns.map(col): _*)
+        .collect().toSeq.sortBy(_.getString(0))
+      assert(rows(spark.sql(ingest.utxoViewSql())) == rows(ingest.utxo(spark)),
+        s"utxoViewSql diverged from utxo() $when")
+    }
     all.grouped(5).zipWithIndex.foreach { case (chunk, i) =>
       ingest.processBatch(spark.createDataset(chunk), i.toLong)
-      val upTo = (i + 1) * 5
-      val expect = UtxoQueries.utxos(
-        BlockDerivation.derive(spark.createDataset(all.take(upTo))))
-        .select("boxId").collect().map(_.getString(0)).toSet
       val got = ingest.utxo(spark).select("boxId").collect().map(_.getString(0)).toSet
-      assert(got == expect, s"utxo view diverged after batch $i")
+      assert(got == boxIds(all.take((i + 1) * 5)), s"utxo view diverged after batch $i")
+      assertSqlPinMatches(s"after batch $i")
     }
+    // a fork batch (both branches at once) republishes the set as a base
+    ingest.processBatch(spark.createDataset(forked.filter(_.header.height > 40)), 8L)
+    val winners = forked.filter(b => winnerIds.contains(b.header.id))
+    assert(ingest.utxo(spark).select("boxId").collect().map(_.getString(0)).toSet ==
+      boxIds(all ++ winners), "utxo view diverged after the fork batch")
+    assertSqlPinMatches("after the fork batch")
   }
 
   test("heal replays an interrupted fork rebuild from the progress marker (sparse-table crash window)") {

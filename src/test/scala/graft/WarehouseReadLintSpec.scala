@@ -5,11 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Lint over the warehouse read path: every parquet read in the ingest,
-  * serve and fixture readers declares its table's schema
-  * (`.read.schema(…).parquet(`, through `ChainIngest.read`). An inferring
+/** Lint over the warehouse read and commit paths. Every parquet read in
+  * the ingest, serve and fixture readers declares its table's schema
+  * (`.read.schema(…).parquet(`, through `ChainIngest.read`): an inferring
   * `.read.parquet(` runs a footer job on every read and throws on a table
-  * root that holds no part file yet.
+  * root that holds no part file yet. And `ChainIngest` lists warehouse dirs
+  * in one place and publishes versions and markers in one place, so its
+  * listing and its tmp-then-rename commit discipline cannot drift apart
+  * between copies.
   */
 class WarehouseReadLintSpec extends AnyFunSuite {
 
@@ -27,6 +30,25 @@ class WarehouseReadLintSpec extends AnyFunSuite {
     val hits = readers.flatMap(f =>
       inferringReads(f.toString, Files.readAllLines(f).asScala.toSeq))
     assert(hits.isEmpty, hits.mkString("inferring reads:\n", "\n", ""))
+  }
+
+  /** Occurrences of `call` in `lines`. */
+  private def count(lines: Seq[String], call: String): Int =
+    lines.map(_.sliding(call.length).count(_ == call)).sum
+
+  test("ChainIngest keeps one directory lister and one atomic publish") {
+    val ingest = Paths.get("src/main/scala/graft/streaming/ChainIngest.scala")
+    val lines = Files.readAllLines(ingest).asScala.toSeq
+    Seq("Files.list(", "Files.move(").foreach { call =>
+      val n = count(lines, call)
+      assert(n <= 1, s"$ingest holds $n `$call` calls: list dirs through `ls` " +
+        "and publish through `publish`")
+    }
+  }
+
+  test("the call count sees every occurrence, also two on one line") {
+    assert(count(Seq("Files.list(a); Files.list(b)", "x", "Files.move(c)"), "Files.list(") == 2)
+    assert(count(Seq("Files.listing(a)"), "Files.list(") == 0)
   }
 
   test("the lint flags an inferring read and passes a declared one") {
